@@ -26,6 +26,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from arrow_ballista_spark.operators.caching import tracked_persist
+from arrow_ballista_spark.types import local_frame
 
 
 def hash_bucket(col: Column, digits: int = 4) -> Column:
@@ -162,7 +163,8 @@ def pack_shards(
     # offsets ride back as a broadcast-joined n_buckets-row frame: a
     # chained F.when would nest one CaseWhen per bucket and overflow the
     # codegen / class constant pool at 10^3-10^4 buckets
-    offset_df = df.sparkSession.createDataFrame(
+    offset_df = local_frame(
+        df.sparkSession,
         [(int(b), int(off)) for b, off in offsets.items()],
         "_bkt long, _bkt_offset long",
     )

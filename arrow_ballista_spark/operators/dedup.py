@@ -32,6 +32,7 @@ from arrow_ballista_spark.operators.caching import (
     tracked_local_checkpoint,
     tracked_persist,
 )
+from arrow_ballista_spark.types import local_frame
 
 # MinHash modulus: 2^31 - 1 (Mersenne prime).  Base hashes and permutation
 # coefficients stay < 2^31 so a*h+b < 2^62 never overflows signed 64-bit.
@@ -560,17 +561,37 @@ def minhash_sigs_arrow(
     )
 
 
-def _band_hash(cols: list, band: int) -> Column:
-    """THE banding key: one 64-bit xxhash over a band's rows-per-band
-    signature values plus the band-index salt.  Both signature layouts
-    (``mh_*`` columns, ``mh`` array) derive from this single expression
-    so a stored LSH index and a fresh batch can never band differently."""
-    return F.xxhash64(*cols, F.lit(band))
+def _band_keys(value_sql, num_perm: int, rows_per_band: int) -> Column:
+    """THE banding key array: per band, one 64-bit xxhash over that
+    band's rows-per-band signature values plus the band index as an INT
+    salt — ``array(xxhash64(v0, v1, .., 0), xxhash64(v4, .., 1), ..)``.
+    ``value_sql(i)`` is the SQL for signature value ``i``; both layouts
+    (``mh_*`` columns, ``mh`` array) derive from this single generator
+    so a stored LSH index and a fresh batch can never band differently
+    (``tests/test_driver_tables.py`` pins the keys bit for bit).
+
+    The array is ONE SQL string parsed once (``F.expr``): the equivalent
+    Column tree of per-value/hash/literal calls made ~1,950 of the ~2,500
+    py4j calls of a 128-permutation :func:`minhash_dedup_pairs` plan
+    build (now ~560; 400-550 -> 180-250 ms on a 4-core host)."""
+    return F.expr(
+        "array("
+        + ", ".join(
+            "xxhash64("
+            + ", ".join(
+                value_sql(band * rows_per_band + r)
+                for r in range(rows_per_band)
+            )
+            + f", {band})"
+            for band in range(num_perm // rows_per_band)
+        )
+        + ")"
+    )
 
 
 def band_hash_array(num_perm: int, rows_per_band: int) -> Column:
     """One 64-bit xxhash per LSH band over the ``mh_*`` signature columns
-    — the SINGLE definition of the banding key (via :func:`_band_hash`).
+    — the SINGLE definition of the banding key (via :func:`_band_keys`).
     A stored LSH index and a fresh batch only collide if both were
     banded by this exact expression (seed, band salt, column order), so
     every consumer (:func:`lsh_candidate_pairs`,
@@ -579,40 +600,20 @@ def band_hash_array(num_perm: int, rows_per_band: int) -> Column:
     scalar hash per band beats an array-typed key: cheaper to shuffle
     and hash-join; hash collisions only add candidates, which the
     exact-Jaccard verify removes."""
-    n_bands = num_perm // rows_per_band
-    return F.array(
-        *[
-            _band_hash(
-                [
-                    F.col(f"mh_{band * rows_per_band + r}")
-                    for r in range(rows_per_band)
-                ],
-                band,
-            )
-            for band in range(n_bands)
-        ]
-    )
+    return _band_keys(lambda i: f"`mh_{i}`", num_perm, rows_per_band)
 
 
 def band_hash_array_from_sig(
     sig_col: str, num_perm: int, rows_per_band: int
 ) -> Column:
     """:func:`band_hash_array` over the ARRAY signature layout
-    (:func:`minhash_sigs_arrow`'s output): the same :func:`_band_hash`
-    over the same values — array elements instead of columns — so both
-    layouts produce identical band keys (NULL signatures hash
-    identically too: a NULL array's elements read as the same NULLs the
-    column form carries)."""
-    n_bands = num_perm // rows_per_band
-    c = F.col(sig_col)
-    return F.array(
-        *[
-            _band_hash(
-                [c[band * rows_per_band + r] for r in range(rows_per_band)],
-                band,
-            )
-            for band in range(n_bands)
-        ]
+    (:func:`minhash_sigs_arrow`'s output): the same :func:`_band_keys`
+    expression over the same values — array elements ``sig[i]`` instead
+    of columns — so both layouts produce identical band keys (NULL
+    signatures hash identically too: a NULL array's elements read as
+    the same NULLs the column form carries)."""
+    return _band_keys(
+        lambda i: f"`{sig_col}`[{i}]", num_perm, rows_per_band
     )
 
 
@@ -629,7 +630,7 @@ def lsh_candidate_pairs(
     probability 1-(1-s^r)^b; r=2, b=64 gives ~1-4e-13 recall at s=0.6.
     ``sig_col`` names an ARRAY signature column
     (:func:`minhash_sigs_arrow`); default is the ``mh_*`` column layout
-    — both band through the same :func:`_band_hash` expression.
+    — both band through the same :func:`_band_keys` expression.
     """
     bands = (
         band_hash_array_from_sig(sig_col, num_perm, rows_per_band)
@@ -901,9 +902,10 @@ def simhash_near_dup_pairs(
 #: union-find on the driver — the BPE-driver-loop precedent
 #: (operators/text.py:_BPE_DRIVER_VOCAB_CAP).  Sizing is by PYTHON
 #: driver memory, not raw longs: collected Rows cost ~10-20x the
-#: 16-byte payload (Row objects + the union-find dicts + the
-#: createDataFrame buffers), so 500k pairs is ~100-250 MB peak — safe
-#: even on a default 1g external driver.  The distributed
+#: 16-byte payload (Row objects + the union-find dicts + the label
+#: tuples and their two Arrow columns, types.local_frame), so 500k
+#: pairs is ~100-250 MB peak — safe even on a default 1g external
+#: driver.  The distributed
 #: pointer-jumping loop costs ~1 Spark job per round plus the
 #: edge/label materializations (~10 jobs at sf0.1, each with
 #: ~50-100 ms local fixed cost) — pure overhead when the pair graph
@@ -955,8 +957,8 @@ def _cc_driver(spark, rows, a_col: str, b_col: str, id_type, stats):
             T.StructField("cluster_id", id_type),
         ]
     )
-    return spark.createDataFrame(
-        [(x, comp_min[find(x)]) for x in parent], schema
+    return local_frame(
+        spark, [(x, comp_min[find(x)]) for x in parent], schema
     )
 
 
@@ -1023,7 +1025,12 @@ def connected_components(
     # the union consumes `pairs` twice — persist so an expensive upstream
     # (the LSH pipeline) materializes once, not per branch
     pairs = tracked_persist(pairs.select(a_col, b_col))
-    if driver_pairs_cap and checkpoint_dir is None:
+    key_type = pairs.schema[a_col].dataType
+    if (
+        driver_pairs_cap
+        and checkpoint_dir is None
+        and pairs.schema[b_col].dataType == key_type
+    ):
         # r13 small-graph fast path (see _CC_DRIVER_PAIRS_CAP): a
         # bounded limit-COUNT decides (JVM-side — no Python rows ship
         # on the over-cap path, where a limit-collect would fetch and
@@ -1033,13 +1040,16 @@ def connected_components(
         # pins force the distributed loop with driver_pairs_cap=0.
         # A caller passing checkpoint_dir wants durable round recovery
         # (a cluster-scale run) — never shortcut that to the driver.
+        # Mismatched key types (int id_a, long id_b) also stay on the
+        # loop, whose union lets Spark widen them: the driver frame has
+        # ONE id type for both output columns.
         if pairs.limit(driver_pairs_cap + 1).count() <= driver_pairs_cap:
             return _cc_driver(
                 pairs.sparkSession,
                 pairs.collect(),
                 a_col,
                 b_col,
-                pairs.schema[a_col].dataType,
+                key_type,
                 stats,
             )
     edges = pairs.select(

@@ -11,6 +11,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from arrow_ballista_spark.operators.caching import tracked_persist
+from arrow_ballista_spark.types import local_frame
 
 # Tiny per-language stopword lists for the n-gram/stopword language-ID
 # heuristic.  (Deterministic + cheap; a real pipeline would swap in a
@@ -775,8 +776,10 @@ def bpe_train_merges(
         "driver_vocab_cap": driver_vocab_cap
     }
     merges, _ = _bpe_train(docs, text_col, k, **kwargs)
-    return spark.createDataFrame(
-        merges, "rank int, left_tok string, right_tok string, pair_count bigint"
+    return local_frame(
+        spark,
+        merges,
+        "rank int, left_tok string, right_tok string, pair_count bigint",
     )
 
 
@@ -908,9 +911,7 @@ def _bpe_train(
         merges, rep_rows = _bpe_train_driver(
             [(r["w"], r["n"]) for r in head], k
         )
-        rep = spark.createDataFrame(
-            rep_rows, "w string, r string, n bigint"
-        )
+        rep = local_frame(spark, rep_rows, "w string, r string, n bigint")
         return merges, rep
     return _bpe_train_distributed(words, k)
 

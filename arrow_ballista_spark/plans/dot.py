@@ -10,34 +10,18 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-
-def _children(node, allow_final: bool):
-    out = []
-    children = node.children()
-    for i in range(children.size()):
-        out.append(children.apply(i))
-    # AQE / query-stage nodes expose their subtree via plan accessors, not
-    # children().  finalPhysicalPlan FORCES execution of every query stage
-    # — only touch it when the caller asked to execute; otherwise render
-    # the initial (pre-AQE) plan.
-    accessors = ("plan", "finalPhysicalPlan" if allow_final else "initialPlan")
-    for attr in accessors:
-        try:
-            out.append(getattr(node, attr)())
-        except Exception:
-            pass
-    return out
+from arrow_ballista_spark.plans.metrics import plan_children
 
 
-def _walk(node, allow_final: bool, counter=None, parent=None):
+def _walk(node, counter=None, parent=None):
     """Yield (id, label, parent_id) over the physical-plan tree."""
     if counter is None:
         counter = [0]
     my_id = counter[0]
     yield my_id, node.nodeName(), parent
-    for child in _children(node, allow_final):
+    for child in plan_children(node):
         counter[0] += 1
-        yield from _walk(child, allow_final, counter, my_id)
+        yield from _walk(child, counter, my_id)
 
 
 def plan_dot(df: DataFrame, execute: bool = False) -> str:
@@ -51,7 +35,7 @@ def plan_dot(df: DataFrame, execute: bool = False) -> str:
         '  rankdir="BT";',
         "  node [shape=box, fontname=monospace];",
     ]
-    for nid, label, parent in _walk(plan, allow_final=execute):
+    for nid, label, parent in _walk(plan):
         safe = label.replace('"', "'")
         lines.append(f'  n{nid} [label="{safe}"];')
         if parent is not None:

@@ -10,34 +10,43 @@ endpoint."""
 
 from __future__ import annotations
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame
 
 
-def _walk(node, allow_final: bool):
-    yield node
+def plan_children(node) -> list:
+    """A physical-plan node's children, including the subtrees that
+    query-stage nodes hide behind ``plan()`` and AQE behind
+    ``executedPlan()``: AQE's CURRENT plan — the final one once the
+    query has run, the initial one before — never a trigger of execution
+    (``finalPhysicalPlan`` would run the query; ``initialPlan`` reads
+    zero shuffle bytes on an already-executed query)."""
     children = node.children()
-    for i in range(children.size()):
-        yield from _walk(children.apply(i), allow_final)
-    # AQE / shuffle stage nodes hide their subtree behind plan();
-    # finalPhysicalPlan FORCES execution — only follow it when the caller
-    # asked to execute (metrics on an unexecuted plan are all zero anyway)
-    accessors = ("plan", "finalPhysicalPlan" if allow_final else "initialPlan")
-    for attr in accessors:
+    out = [children.apply(i) for i in range(children.size())]
+    for attr in ("plan", "executedPlan"):
         try:
-            sub = getattr(node, attr)()
-            yield from _walk(sub, allow_final)
-        except Exception:
+            out.append(getattr(node, attr)())
+        except Py4JError:  # not a stage / AQE node
             pass
+    return out
+
+
+def _walk(node):
+    yield node
+    for child in plan_children(node):
+        yield from _walk(child)
 
 
 def collect_metrics(df: DataFrame, execute: bool = True) -> list[dict]:
-    """[{node, metric, value}] for every operator in the executed plan."""
+    """[{node, metric, value}] for every operator in the executed plan.
+    ``execute=False`` reads the plan as it stands and starts no job:
+    real counters when ``df`` already ran, zeros when it never did."""
     if execute:
         df.collect()
     plan = df._jdf.queryExecution().executedPlan()
     out: list[dict] = []
     seen = set()
-    for node in _walk(plan, allow_final=execute):
+    for node in _walk(plan):
         nid = node.id()
         if nid in seen:
             continue

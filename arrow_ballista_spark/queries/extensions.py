@@ -24,6 +24,7 @@ from arrow_ballista_spark.catalog import load_table
 from arrow_ballista_spark.operators import dedup, layout, multimodal, similarity, text
 from arrow_ballista_spark.queries import R, cround, query
 from arrow_ballista_spark.streaming import pipeline as streaming
+from arrow_ballista_spark.types import local_frame
 
 # Shared oracle fragments -------------------------------------------------
 
@@ -4037,9 +4038,7 @@ def ext_sketch_count_min(spark: SparkSession, sf_dir: str) -> DataFrame:
     cms = tracked_persist(
         sk.count_min_build(tok, "w", width=_CMS_W, depth=_CMS_D)
     )
-    probes = spark.createDataFrame(
-        [(t,) for t in _CMS_PROBES], "term string"
-    )
+    probes = local_frame(spark, [(t,) for t in _CMS_PROBES], "term string")
     est = sk.count_min_estimate(
         cms, probes, "term", width=_CMS_W, depth=_CMS_D
     )
@@ -4094,9 +4093,7 @@ def ext_stream_sketch_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = streaming.documents_stream(spark, sf_dir)
     tok = docs.select(F.explode(F.expr("split(text, ' +')")).alias("w"))
     cms = streaming.stream_count_min(tok, "w", width=_CMS_W, depth=_CMS_D)
-    probes = spark.createDataFrame(
-        [(t,) for t in _CMS_PROBES], "term string"
-    )
+    probes = local_frame(spark, [(t,) for t in _CMS_PROBES], "term string")
     return sk.count_min_estimate(
         cms, probes, "term", width=_CMS_W, depth=_CMS_D
     ).select("term", F.col("est").cast("long").alias("est"))

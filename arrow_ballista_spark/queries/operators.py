@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from arrow_ballista_spark.catalog import load_table, register_tables
 from arrow_ballista_spark.queries import cround, query
+from arrow_ballista_spark.types import local_frame
 
 
 # --------------------------------------------------------------------------
@@ -663,8 +664,8 @@ SELECT * FROM (VALUES (1, 'one'), (2, 'two'), (3, 'three')) AS t(id, name)
     doc="inline VALUES relation (ref ValuesNode datafusion.proto:214-218)",
 )
 def values_inline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.createDataFrame(
-        [(1, "one"), (2, "two"), (3, "three")], "id int, name string"
+    return local_frame(
+        spark, [(1, "one"), (2, "two"), (3, "three")], "id int, name string"
     )
 
 

@@ -35,6 +35,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from arrow_ballista_spark.types import local_frame
 
 
 def events_stream(
@@ -235,7 +236,7 @@ def run_available_now(
         CHECKSUM_SINK_RESULTS.append(
             {"mode": output_mode, "batches": batches}
         )
-        return stream_df.sparkSession.createDataFrame([], stream_df.schema)
+        return local_frame(stream_df.sparkSession, [], stream_df.schema)
 
     name = f"sink_{uuid.uuid4().hex[:10]}"
     q = (
@@ -317,7 +318,8 @@ def stream_count_min(
         .start()
     )
     q.awaitTermination()
-    return tok_stream.sparkSession.createDataFrame(
+    return local_frame(
+        tok_stream.sparkSession,
         [(r, c, n) for (r, c), n in sorted(register.items())],
         "row int, col long, cnt long",
     )

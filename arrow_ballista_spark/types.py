@@ -86,3 +86,38 @@ def to_spark_schema(schema: pa.Schema) -> T.StructType:
             for f in schema
         ]
     )
+
+
+def local_frame(spark, rows, schema: T.StructType | str):
+    """Driver-computed ``rows`` (tuples in ``schema`` field order) as an
+    in-JVM ``LocalRelation``: the rows become one ``pyarrow.Table`` and
+    ``createDataFrame(pa.Table, schema)`` ships it as Arrow batches.
+    ``createDataFrame(<python rows>)`` instead plans a ``LogicalRDD`` over
+    pickled rows, so every consumer forks a Python worker to unpickle
+    them: collecting a 22-row frame took 230-300 ms that way against
+    30-40 ms this way (local[2] on a 4-core host).  Every driver-built
+    table in the engine goes through here (``tests/test_driver_tables.py``
+    guards it).
+
+    NULLs (``None``) and an empty row list are kept; a value that does
+    not fit its column raises a ``ValueError`` naming the column."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T._parse_datatype_string(schema)
+    arrow_schema = to_arrow_schema(schema)
+    rows = list(rows)
+    columns = []
+    for i, field in enumerate(arrow_schema):
+        try:
+            columns.append(pa.array([r[i] for r in rows], type=field.type))
+        except (
+            pa.ArrowException, IndexError, OverflowError, TypeError, ValueError
+        ) as e:
+            raise ValueError(
+                f"driver table column {field.name!r} "
+                f"({schema[i].dataType.simpleString()}): {e}"
+            ) from e
+    return spark.createDataFrame(
+        pa.Table.from_arrays(columns, schema=arrow_schema), schema
+    )

@@ -36,7 +36,6 @@ _SLOW_TESTS = {
     "test_extension_vs_duckdb[ext_graph_pagerank]",
     "test_asof_join_matches_reference",
     "test_extension_vs_duckdb[ext_dedup_canonical]",
-    "test_extension_vs_duckdb[ext_dedup_clusters]",
     "test_extension_vs_duckdb[ext_graph_triangles]",
     "test_extension_vs_duckdb[ext_dedup_word_bigram_jaccard]",
     "test_triangle_orientation_invariance",

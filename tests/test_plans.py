@@ -108,6 +108,38 @@ def test_operator_metrics_collected(spark):
     assert summary["output_rows"]
 
 
+def test_metrics_read_aqe_current_plan_without_running_it(spark):
+    """execute=False reads AQE's current plan: real shuffle bytes once
+    the query has run, and no Spark job started on a fresh frame (the
+    DOT export walks the same plan)."""
+    from arrow_ballista_spark.plans import metrics
+    from arrow_ballista_spark.plans.dot import plan_dot
+
+    def shuffle_bytes(df):
+        return sum(
+            r["value"]
+            for r in metrics.collect_metrics(df, execute=False)
+            if r["metric"] == "shuffleBytesWritten"
+        )
+
+    df = (
+        spark.range(0, 2000, numPartitions=4)
+        .groupBy((F.col("id") % 7).alias("k"))
+        .count()
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("metrics-no-exec", "collect_metrics(execute=False)")
+    try:
+        assert shuffle_bytes(df) == 0
+        assert "Exchange" in plan_dot(df)
+        assert list(sc.statusTracker().getJobIdsForGroup("metrics-no-exec")) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    df.collect()
+    assert shuffle_bytes(df) > 0
+
+
 def test_plan_dot_export(spark):
     """DOT export (ref execution_graph_dot.rs / /api/job/{id}/dot)."""
     from arrow_ballista_spark.plans.dot import plan_dot

@@ -4,6 +4,7 @@ adversarial inputs — the same discipline as the r12 kernel swaps."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -158,34 +159,47 @@ def test_lloyd_update_partials_match_posexplode_means(spark):
     assert out1 == out2 and len(out1) == 40
 
 
-def test_cc_driver_union_find_matches_distributed(spark):
-    """The bounded driver union-find path (r13) must produce the exact
-    labels of the distributed pointer-jumping loop, report n_nodes the
-    same way, and stay off when checkpoint_dir is given."""
+_CC_EDGES = (
+    [(i, i + 1) for i in range(40)]          # a 41-node chain
+    + [(100, 101), (101, 102), (100, 102)]   # a clique
+    + [(200, 201)]
+    + [(7, 7)]                               # self-loop
+)
+
+
+def _cc_labels(pairs, **kw):
     from arrow_ballista_spark.operators.dedup import connected_components
 
-    edges = (
-        [(i, i + 1) for i in range(40)]          # a 41-node chain
-        + [(100, 101), (101, 102), (100, 102)]   # a clique
-        + [(200, 201)]
-        + [(7, 7)]                               # self-loop
+    stats: dict = {}
+    out = connected_components(pairs, stats=stats, **kw)
+    return {r.id: r.cluster_id for r in out.collect()}, stats
+
+
+@pytest.mark.parametrize("below_cap", [0, 1], ids=["at_cap", "over_cap"])
+def test_cc_driver_union_find_matches_distributed(spark, below_cap):
+    """Both sides of the driver union-find switch (r13) must produce the
+    exact labels of the distributed pointer-jumping loop and report
+    n_nodes the same way: a cap of exactly n_pairs takes the driver
+    path, n_pairs - 1 the loop."""
+    pairs = spark.createDataFrame(_CC_EDGES, "id_a long, id_b long")
+    want, s_dist = _cc_labels(pairs, driver_pairs_cap=0)
+    got, stats = _cc_labels(
+        pairs, driver_pairs_cap=len(_CC_EDGES) - below_cap
     )
-    pairs = spark.createDataFrame(edges, "id_a long, id_b long")
-    s_drv: dict = {}
-    s_dist: dict = {}
-    drv = {
-        r.id: r.cluster_id
-        for r in connected_components(pairs, stats=s_drv).collect()
-    }
-    dist = {
-        r.id: r.cluster_id
-        for r in connected_components(
-            pairs, stats=s_dist, driver_pairs_cap=0
-        ).collect()
-    }
-    assert drv == dist
-    assert s_drv["driver_union_find"] is True
-    assert s_drv["n_nodes"] == s_dist["n_nodes"] == len(drv)
+    assert got == want
+    assert stats.get("driver_union_find", False) is (below_cap == 0)
+    assert stats["n_nodes"] == s_dist["n_nodes"] == len(got)
+
+
+def test_cc_mismatched_key_types_take_distributed_loop(spark):
+    """int id_a with long id_b: the driver frame has one id type, so the
+    switch falls back to the loop (whose union widens the keys) and the
+    labels equal the forced-loop run."""
+    pairs = spark.createDataFrame(_CC_EDGES, "id_a int, id_b long")
+    want, _ = _cc_labels(pairs, driver_pairs_cap=0)
+    got, stats = _cc_labels(pairs)
+    assert got == want
+    assert "driver_union_find" not in stats
 
 
 def test_lloyd_arrow_update_drops_empty_clusters(spark):
