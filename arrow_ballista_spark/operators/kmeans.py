@@ -5,57 +5,48 @@ semantic-dedup bucketing.
 
 No reference parity: arrow-ballista has no ML operators (SURVEY.md §2 —
 extension beyond the reference surface).  The design is the standard
-broadcast-Lloyd iteration every distributed ML library uses:
+broadcast-Lloyd iteration every distributed ML library uses, as ONE
+driver-state loop (:func:`_lloyd`) with one kernel per step:
 
-- **Assignment is map-only**: centroids (k rows) broadcast to every task;
-  each point computes k squared-L2 distances JVM-side (``aggregate`` over
-  ``sequence`` — no Python in the loop) and keeps the argmin via
-  ``min_by``.  At 100 TB this is a single scan per iteration, no shuffle
-  of the points.
-- **Update is one two-phase aggregation**: explode (cluster, dim, value)
-  → partial sums per (cluster, dim) map-side → k·dim rows reduce-side —
-  never the points themselves.  Centroid arrays are rebuilt with a
-  collect_list bounded by k·dim.
-- **Determinism**: init = the k smallest-id points (no rand(), so reruns
-  and retries agree); distance summation is left-to-right over dimensions
-  (binary-identical to the DuckDB oracle); updated centroids round to 6
-  decimals so cross-engine float noise cannot flip a near-tie assignment;
-  distance ties break by cluster id.
+- **Seed**: the k smallest-id non-NULL points (:func:`_collect_centroids`
+  — TakeOrdered, k rows to the driver; no rand(), so reruns and retries
+  agree).
+- **Update** (every iteration but the last, :func:`_update`): one fused
+  ``mapInArrow`` pass assigns each Arrow batch and emits k·dim
+  per-cluster partial sums and counts; a two-phase aggregate finishes
+  ``round(try_divide(sum(s), sum(n)), 6)`` and k·dim means collect to
+  the driver.  The points never shuffle, and the plan of every
+  iteration is a flat scan — there is no lineage to checkpoint.
+- **Final assignment**: one map-only ``mapInArrow`` pass
+  (:func:`_assign_arrow`) emitting ``(id, v, cluster)`` — the vector
+  rides along, so :func:`semantic_dedup_pairs` needs no re-join.
 
+Pairs (:func:`semantic_dedup_pairs`) come from one per-cluster Gram
+``applyInPandas`` (:func:`_pairs`).
+
+``vectorized`` chooses only the numpy arithmetic inside those kernels:
+
+- ``False`` (the oracle path): squared-L2 and Gram dots accumulate per
+  coordinate in order (``acc += (v_i - c_i)^2`` — elementwise float64,
+  bit-identical to the SQL left-to-right ``aggregate`` fold the DuckDB
+  oracle mirrors);
+- ``True`` (the scale path): BLAS matmuls, ~50x faster per distance at
+  n·k ~ 10^8 but summed in a different order (~1e-16), so a near-tie can
+  flip; agreement with the exact kernels is pinned by test.
+
+Either way ``np.argmin`` keeps the first minimum with cids ascending (the
+``(dist, cid)`` tie-break), and the 6-dp rounding of the means absorbs
+partial-sum order, so cross-engine float noise cannot flip an assignment.
 ``iters`` is intentionally small-and-fixed (Lloyd's converges fast for
 coarse quantization; IVF needs "good", not "optimal", cells).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _sqdist(vec: str, cent: str) -> F.Column:
-    """Squared L2 distance with deterministic left-to-right summation —
-    the expression form (not a UDF) keeps it inside codegen."""
-    return F.expr(
-        f"aggregate(sequence(1, size({vec})), cast(0.0 as double), "
-        f"(acc, i) -> acc + ({vec}[i-1] - {cent}[i-1]) * "
-        f"({vec}[i-1] - {cent}[i-1]))"
-    )
-
-
-# r12: below this many k*dim distance terms the exact kernel embeds the
-# centroids as literal expression chains (codegen'd JVM arithmetic —
-# map-only assignment, driver-side centroid state, no crossJoin/groupBy
-# shuffle per iteration).  Above it the unrolled expression tree puts
-# Catalyst parse/codegen on the critical path (same-host A/B at sf0.1:
-# dim-8 whitened entries −0.8..−1.0 s with literals; dim-64 entries
-# +1.3..+5.1 s — the cutoff sits between 352 and 512 terms) and the
-# ordered-accumulation Arrow kernel (_assign_exact_arrow) takes over.
-_LITERAL_TERMS_MAX = 384
-
-
-# the exact-float64 SQL literal contract lives in similarity._dlit
-# (one definition — r13); re-exported here for the literal-W callers
-from arrow_ballista_spark.operators.similarity import _dlit  # noqa: E402,F401
+from arrow_ballista_spark.operators.similarity import _vector_reader
 
 
 def _collect_centroids(e: DataFrame, k: int, id_col: str):
@@ -63,82 +54,60 @@ def _collect_centroids(e: DataFrame, k: int, id_col: str):
     rows to the driver, the bounded IVF-centroid pattern).  Returns
     ``[(cid, [floats...]), ...]`` with cid = 0-based rank.  NULL
     vectors are excluded from the seed scan (ADVICE r12: a NULL among
-    the k smallest ids would raise ``TypeError`` on the driver; the
-    registry fixtures carry no NULL embeddings, so this is
-    value-neutral there and a defined behavior elsewhere)."""
+    the k smallest ids would raise ``TypeError`` on the driver)."""
     rows = (
         e.where(F.col("v").isNotNull()).orderBy(id_col).limit(k).collect()
     )
     return [(i, list(r["v"])) for i, r in enumerate(rows)]
 
 
-def _assign_literal(e: DataFrame, cent_rows, id_col: str) -> DataFrame:
-    """Map-only nearest-centroid assignment with the centroids embedded
-    as exact literals: per centroid an explicit left-to-right squared-L2
-    chain (identical summation order and float64 values as the
-    ``aggregate(sequence(...))`` fold over a broadcast centroid column),
-    argmin by ``array_min`` over (dist, cid) structs — the same
-    (dist, cid) lexicographic tie-break as ``min_by``.  Returns
-    ``(id_col, v, cluster)`` — the vector rides along so downstream
-    stages need no re-join of assignments against the point set."""
-    structs = []
-    for cid, cent in cent_rows:
-        chain = " + ".join(
-            f"(v[{i}] - {_dlit(c)}) * (v[{i}] - {_dlit(c)})"
-            for i, c in enumerate(cent)
-        )
-        structs.append(
-            f"struct((CAST(0.0 AS DOUBLE) + {chain}) AS dist, "
-            f"CAST({cid} AS BIGINT) AS cid)"
-        )
-    argmin = f"array_min(array({', '.join(structs)})).cid"
-    return e.select(
-        F.col(id_col), F.col("v"), F.expr(argmin).alias("cluster")
-    )
+def _nearest(cent_rows, vectorized: bool):
+    """The one distance kernel: returns ``nearest(V) -> row positions``
+    of each point's nearest centroid in ``cent_rows`` order.  A nested
+    function, so cloudpickle ships it by value inside the kernels'
+    closures (workers never import this module)."""
+    import numpy as np
+
+    C = np.asarray([c for _, c in cent_rows], dtype=np.float64)
+    c_sq = (C * C).sum(axis=1)
+
+    def nearest(V):
+        import numpy as np
+
+        if vectorized:
+            # |v-c|^2 = |v|^2 - 2 v.c + |c|^2; |v|^2 is constant per row
+            D = -2.0 * (V @ C.T) + c_sq[None, :]
+        else:
+            D = np.zeros((len(V), len(C)), dtype=np.float64)
+            for i in range(C.shape[1]):  # coordinate order == the SQL fold
+                diff = V[:, i : i + 1] - C[:, i][None, :]
+                D += diff * diff
+        return D.argmin(axis=1)
+
+    return nearest
 
 
-def _assign_exact_arrow(e: DataFrame, cent_rows, id_col: str) -> DataFrame:
-    """Map-only nearest-centroid assignment as ONE vectorized Arrow pass
-    — the BIT-EXACT twin of the broadcast-fold kernel for k*dim above
-    the literal cutoff (the r12 _pq_assign_arrow pattern): squared-L2
-    accumulated per coordinate in order (``acc += (v_i - c_i)^2`` —
-    elementwise float64, identical to the ``aggregate`` left-to-right
-    fold), ``np.argmin`` first-min ties == ``min_by(cid,
-    struct(dist, cid))`` with cids ascending.  The interpreted fold
-    costs ~1 us per distance term; this kernel hands each Arrow batch
-    to numpy and needs no crossJoin, no groupBy(id) argmin shuffle.
-    Returns ``(id_col, v, cluster)`` — the vector rides along so
-    downstream stages need no re-join against the point set.
-
-    Input contract (ADVICE r12): non-NULL, fixed-dimension vectors —
-    the batch ``flatten().reshape(n, d)`` raises on NULL/ragged rows
-    where the retired aggregate/min_by fold yielded a NULL distance.
-    Every public caller passes dense fixture embeddings (cast
-    ``array<double>``), and :func:`_collect_centroids` excludes NULL
-    seeds."""
+def _assign_arrow(
+    e: DataFrame, cent_rows, id_col: str, vectorized: bool
+) -> DataFrame:
+    """Map-only nearest-centroid assignment in one Arrow pass.  Returns
+    ``(id_col, v, cluster)``; cluster is the ACTUAL cid (a cluster that
+    emptied in an update leaves a gap in the cid sequence)."""
     from pyspark.sql import types as T
 
     cids_py = [int(cid) for cid, _ in cent_rows]
-    cents_py = [[float(x) for x in c] for _, c in cent_rows]
-    d = len(cents_py[0])
+    nearest = _nearest(cent_rows, vectorized)
+    read = _vector_reader("kmeans_assign", len(cent_rows[0][1]))
 
     def assign(batches):
         import numpy as np
         import pyarrow as pa
 
-        C = np.asarray(cents_py, dtype=np.float64)
         cids = np.asarray(cids_py, dtype=np.int64)
         for batch in batches:
-            ids = batch.column(0)
             va = batch.column(1)
-            n = len(va)
-            V = va.flatten().to_numpy(zero_copy_only=False).reshape(n, d)
-            D = np.zeros((n, len(cids)), dtype=np.float64)
-            for i in range(d):  # coordinate order == the SQL fold
-                diff = V[:, i : i + 1] - C[:, i][None, :]
-                D += diff * diff
             yield pa.RecordBatch.from_arrays(
-                [ids, va, pa.array(cids[D.argmin(axis=1)])],
+                [batch.column(0), va, pa.array(cids[nearest(read(va))])],
                 [id_col, "v", "cluster"],
             )
 
@@ -152,138 +121,84 @@ def _assign_exact_arrow(e: DataFrame, cent_rows, id_col: str) -> DataFrame:
     return e.select(F.col(id_col), F.col("v")).mapInArrow(assign, schema)
 
 
-def _update_partials_arrow(e: DataFrame, cent_rows) -> DataFrame:
-    """Fused assignment + centroid-update partial sums in ONE Arrow pass
-    (r13, VERDICT r12 item 4): intermediate Lloyd iterations never need
-    the per-point assignment — only the per-cluster component means — so
-    instead of shipping ``(id, v, cluster)`` back through the boundary
-    and posexploding n*dim rows into the update shuffle, each batch
-    emits k*dim ``(cluster, pos, s, n)`` partial rows (numpy cluster
-    sums + counts over the same bit-exact distance kernel as
-    :func:`_assign_exact_arrow`).  The update shuffle shrinks by a
-    factor of n/(k*batches); the final agg computes the same
-    ``round(sum/count, 6)`` means (see :func:`_lloyd_driver` on why the
-    6-dp round absorbs partial-sum order, which the previous
-    ``avg``-over-shuffle was equally subject to)."""
+def _update(e: DataFrame, cent_rows, vectorized: bool):
+    """One Lloyd update.  A single Arrow pass fuses the assignment with
+    the centroid partial sums: each batch emits k*dim ``(cluster, pos,
+    s, n)`` rows (per-cluster coordinate sums and counts), so the update
+    shuffle is k*dim rows per batch, never the points.  The means finish
+    as ``round(try_divide(sum(s), sum(n)), 6)`` — the 6-dp round absorbs
+    partial-sum order — and collect to the driver.  An empty cluster
+    emits ``(s=0, n=0)``: its mean is NULL under ``try_divide`` (a bare
+    ``/`` throws in Spark 4's default ANSI mode) and it is dropped from
+    the next iteration."""
     cids_py = [int(cid) for cid, _ in cent_rows]
-    cents_py = [[float(x) for x in c] for _, c in cent_rows]
-    d = len(cents_py[0])
+    d = len(cent_rows[0][1])
+    nearest = _nearest(cent_rows, vectorized)
+    read = _vector_reader("kmeans_assign", d)
 
     def partials(batches):
         import numpy as np
         import pyarrow as pa
 
-        C = np.asarray(cents_py, dtype=np.float64)
-        cids = np.asarray(cids_py, dtype=np.int64)
-        kk = len(cids)
-        pos = np.tile(np.arange(d, dtype=np.int32), kk)
-        clus = np.repeat(cids, d)
+        kk = len(cids_py)
+        clus = pa.array(np.repeat(np.asarray(cids_py, dtype=np.int64), d))
+        pos = pa.array(np.tile(np.arange(d, dtype=np.int32), kk))
         for batch in batches:
-            va = batch.column(0)
-            n = len(va)
-            if n == 0:
+            if batch.num_rows == 0:
                 continue
-            V = va.flatten().to_numpy(zero_copy_only=False).reshape(n, d)
-            D = np.zeros((n, kk), dtype=np.float64)
-            for i in range(d):  # coordinate order == the SQL fold
-                diff = V[:, i : i + 1] - C[:, i][None, :]
-                D += diff * diff
-            amin = D.argmin(axis=1)
+            V = read(batch.column(0))
+            amin = nearest(V)
             sums = np.zeros((kk, d), dtype=np.float64)
             np.add.at(sums, amin, V)
             counts = np.bincount(amin, minlength=kk).astype(np.int64)
             yield pa.RecordBatch.from_arrays(
                 [
-                    pa.array(clus),
-                    pa.array(pos),
+                    clus,
+                    pos,
                     pa.array(sums.reshape(-1)),
                     pa.array(np.repeat(counts, d)),
                 ],
                 ["cluster", "pos", "s", "n"],
             )
 
-    return e.select("v").mapInArrow(
-        partials, "cluster long, pos int, s double, n long"
+    rows = (
+        e.select("v")
+        .mapInArrow(partials, "cluster long, pos int, s double, n long")
+        .groupBy("cluster", "pos")
+        .agg(F.round(F.try_divide(F.sum("s"), F.sum("n")), 6).alias("m"))
+        .where(F.col("m").isNotNull())
+        .collect()
     )
+    by_cid: dict = {}
+    for r in rows:
+        by_cid.setdefault(int(r["cluster"]), {})[int(r["pos"])] = float(r["m"])
+    return [
+        (cid, [dims[p] for p in sorted(dims)])
+        for cid, dims in sorted(by_cid.items())
+    ]
 
 
-def _lloyd_driver(
-    e: DataFrame, cent_rows, iters: int, id_col: str, literal: bool
+def _lloyd(
+    e: DataFrame, k: int, iters: int, id_col: str, vectorized: bool
 ) -> DataFrame:
-    """Lloyd core with driver-side centroid state (the IVF pattern):
-    every iteration's Spark plan is lineage-flat map-only assignment
-    (literal-chain kernel below the term cutoff, vectorized Arrow
-    kernel above it — both bit-exact, see the assigners); the update
-    aggregates per-cluster component means and collects k*dim rounded
-    rows to the driver.  Returns the final ``(id_col, v, cluster)``
-    assignment.
+    """The driver-state Lloyd loop over ``e = (id_col, v array<double>)``:
+    seed, ``iters - 1`` updates, final assignment.  Returns
+    ``(id_col, v, cluster)`` — empty (same schema) when ``e`` holds no
+    non-NULL vector."""
+    cent_rows = _collect_centroids(e, k, id_col)
+    if not cent_rows:
+        return e.withColumn("cluster", F.lit(None).cast("long")).where(
+            F.lit(False)
+        )
+    for _ in range(iters - 1):
+        cent_rows = _update(e, cent_rows, vectorized)
+    return _assign_arrow(e, cent_rows, id_col, vectorized)
 
-    Update shapes (r13, VERDICT r12 item 4 — the old form posexploded
-    the full point set to n*dim (cluster, pos, val) rows per iteration,
-    multiplying the update shuffle by the dimension):
 
-    - literal path: ``groupBy(cluster).agg(round(avg(v[i]), 6) ...)`` —
-      one per-dim column list, hash-aggregated map-side to k rows per
-      map task (same ``round(avg, 6)`` expression as before, same
-      NULL semantics: ``v[i]`` of a short/NULL array is NULL, which
-      ``avg`` skips exactly like the dropped posexplode row);
-    - Arrow path: the fused :func:`_update_partials_arrow` pass (k*dim
-      partial rows per batch), finished by
-      ``round(sum(s)/sum(n), 6)`` — the identical mean up to float
-      partial-sum order, which the 6-dp round absorbs just as it did
-      for the shuffle-order-dependent ``avg`` merge before."""
-    assign_fn = _assign_literal if literal else _assign_exact_arrow
-    assigned = None
-    for it in range(iters):
-        is_last = it == iters - 1
-        if not is_last and not literal:
-            pos_rows = (
-                _update_partials_arrow(e, cent_rows)
-                .groupBy("cluster", "pos")
-                # try_divide: the kernel emits (s=0, n=0) partials for
-                # EMPTY clusters, and under Spark 4's default ANSI mode
-                # a bare sum/0 throws (non-ANSI would yield NULL) — the
-                # NULL means are dropped below either way
-                .agg(
-                    F.round(F.try_divide(F.sum("s"), F.sum("n")), 6)
-                    .alias("m")
-                )
-                .collect()
-            )
-            by_cid: dict = {}
-            for r in pos_rows:
-                if r["m"] is None:
-                    # empty cluster: the kernel emits (s=0, n=0) partials
-                    # for every centroid, so sum/0 is NULL here — drop
-                    # the cluster exactly like the retired posexplode
-                    # update (no assigned rows -> no centroid row) and
-                    # the literal path's groupBy do
-                    continue
-                by_cid.setdefault(int(r["cluster"]), {})[int(r["pos"])] = (
-                    float(r["m"])
-                )
-            cent_rows = [
-                (cid, [dims[p] for p in sorted(dims)])
-                for cid, dims in sorted(by_cid.items())
-            ]
-            continue
-        assigned = assign_fn(e, cent_rows, id_col)
-        if not is_last:
-            d = len(cent_rows[0][1])
-            row = assigned.groupBy("cluster").agg(
-                *[
-                    F.round(F.avg(F.col("v")[i]), 6).alias(f"_m{i}")
-                    for i in range(d)
-                ]
-            ).collect()
-            cent_rows = [
-                (
-                    int(r["cluster"]),
-                    [float(r[f"_m{i}"]) for i in range(d)],
-                )
-                for r in sorted(row, key=lambda r: int(r["cluster"]))
-            ]
-    return assigned
+def _points(embeddings: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    return embeddings.select(
+        F.col(id_col), F.col(vec_col).cast("array<double>").alias("v")
+    )
 
 
 def kmeans_assign(
@@ -293,131 +208,18 @@ def kmeans_assign(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     vectorized: bool = False,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Run ``iters`` Lloyd iterations; returns ``(id_col, cluster)``.
 
     ``cluster`` is the 0-based index of the nearest centroid after the
     final update, argmin ties broken by smallest cluster id.
-
-    ``checkpoint_dir``: each update deepens the centroid lineage by one
-    aggregation; on long runs a lost executor recomputes every prior
-    iteration.  A durable directory checkpoints the centroid frame
-    (k rows — cheap) per update via ``df.checkpoint()`` (see DEPLOY.md).
-
-    Two assignment kernels, same dataflow:
-
-    - ``vectorized=False`` (default, the oracle path): driver-state
-      Lloyd with a map-only bit-exact assignment — a literal-centroid
-      unrolled chain when ``k * dim <= _LITERAL_TERMS_MAX`` (codegen'd
-      JVM arithmetic; giant trees above the cutoff put Catalyst on the
-      critical path), else the ordered-accumulation Arrow kernel
-      (:func:`_assign_exact_arrow` — numpy per batch, same left-to-right
-      fold bit-for-bit).  Either way: no crossJoin/groupBy shuffle per
-      iteration, values bit-exact against the generated DuckDB SQL
-      (r12 A/Bs for both the cutoff and the kernel swap).
-    - ``vectorized=True`` (the SCALE path): Arrow-batched ``mapInPandas``
-      with one numpy matmul per batch against the broadcast centroid
-      matrix — measured ~50x faster per distance at n*k ~ 10^8
-      (200k x 450 at the 100x fixture).  Centroids collect to the driver
-      per iteration (k x dim floats, a planning-time action, same
-      pattern as IVF).  BLAS summation order differs from the fold at
-      ~1e-16, so a near-tie assignment can flip; agreement with the
-      exact kernel is pinned by test on the driver fixtures.
-    """
-    e = embeddings.select(
-        F.col(id_col), F.col(vec_col).cast("array<double>").alias("v")
-    )
-    # r12: every exact run takes a driver-state Lloyd loop (map-only
-    # assignment, no crossJoin/groupBy shuffle per iteration, flat
-    # lineage) — literal-chain kernel below _LITERAL_TERMS_MAX, the
-    # vectorized bit-exact Arrow kernel above it; values bit-identical
-    # to the fold either way (same summation order, same (dist, cid)
-    # tie-break).  The centroid dim comes off the collected seed rows,
-    # so the old head(1) dim-probe job is gone too.
-    if not vectorized:
-        cent_rows = _collect_centroids(e, k, id_col)
-        if cent_rows:
-            literal = k * len(cent_rows[0][1]) <= _LITERAL_TERMS_MAX
-            return _lloyd_driver(
-                e, cent_rows, iters, id_col, literal
-            ).select(id_col, "cluster")
-        # empty corpus: fall through (the frame loop yields an empty
-        # assignment with the right schema)
-    # deterministic seed: the k smallest-id points (TakeOrdered, k rows)
-    w = Window.orderBy(id_col)
-    cents = (
-        e.orderBy(id_col)
-        .limit(k)
-        .select(
-            (F.row_number().over(w) - 1).cast("long").alias("cid"),
-            F.col("v").alias("cent"),
-        )
-    )
-    assigned = None
-    for it in range(iters):
-        if vectorized:
-            assigned = _assign_vectorized(e, cents, id_col)
-        else:
-            scored = e.crossJoin(F.broadcast(cents)).withColumn(
-                "dist", _sqdist("v", "cent")
-            )
-            assigned = scored.groupBy(id_col).agg(
-                F.expr("min_by(cid, struct(dist, cid))").alias("cluster")
-            )
-        if it < iters - 1:
-            # two-phase mean per (cluster, dim); k*dim rows reduce-side
-            pos = (
-                assigned.join(e, id_col)
-                .select("cluster", F.posexplode("v").alias("pos", "val"))
-                .groupBy("cluster", "pos")
-                .agg(F.round(F.avg("val"), 6).alias("m"))
-            )
-            cents = pos.groupBy("cluster").agg(
-                F.expr(
-                    "transform(array_sort(collect_list(struct(pos, m))), "
-                    "s -> s.m)"
-                ).alias("cent")
-            ).select(F.col("cluster").alias("cid"), "cent")
-            if checkpoint_dir:
-                from arrow_ballista_spark.operators.caching import (
-                    reliable_checkpoint,
-                )
-
-                cents = reliable_checkpoint(cents, checkpoint_dir)
-    return assigned.select(id_col, "cluster")
-
-
-def _assign_vectorized(e: DataFrame, cents: DataFrame, id_col: str) -> DataFrame:
-    """Numpy-matmul nearest-centroid assignment (see kmeans_assign)."""
-    import numpy as np
-    import pandas as pd
-
-    rows = cents.orderBy("cid").collect()  # k rows — planning-time action
-    # label by the ACTUAL cid, not the positional argmin index: a cluster
-    # that empties during an update leaves a gap in the cid sequence, and
-    # rows are sorted by cid so argmin positions would shift past it
-    cids = np.array([r["cid"] for r in rows], dtype="int64")
-    C = np.array([list(r["cent"]) for r in rows], dtype=np.float64)
-    c_sq = (C * C).sum(axis=1)
-
-    def assign(batches):
-        for pdf in batches:
-            V = np.array(pdf["v"].tolist(), dtype=np.float64)
-            # |v-c|^2 = |v|^2 - 2 v.c + |c|^2; |v|^2 constant per row, so
-            # argmin over (-2 v.C^T + |c|^2) suffices
-            d = -2.0 * (V @ C.T) + c_sq[None, :]
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    # np.argmin returns the FIRST minimum — cids ascend,
-                    # so this is the same smallest-cid tie-break as
-                    # min_by(struct(dist, cid))
-                    "cluster": cids[d.argmin(axis=1)],
-                }
-            )
-
-    return e.mapInPandas(assign, f"{id_col} long, cluster long")
+    ``vectorized`` picks the kernel arithmetic (see the module
+    docstring): ``False`` is bit-exact against the generated DuckDB
+    SQL, ``True`` is the BLAS scale path.  Vectors must be non-NULL and
+    of one dimension (a ``ValueError`` names the offending row)."""
+    return _lloyd(
+        _points(embeddings, id_col, vec_col), k, iters, id_col, vectorized
+    ).select(id_col, "cluster")
 
 
 def adaptive_cluster_count(n: int) -> int:
@@ -454,221 +256,66 @@ def semantic_dedup_pairs(
     job), keeping total pair work O(n^1.5) — a FIXED k degenerates to
     O(n^2/k), measured 22x-for-10x-data at the 100x step (SCALING.md
     r9) where the adaptive k ran 2.6x.  The pairwise stage shuffles
-    once on the cluster id, each cluster a separate task; row norms
-    are folded once per ROW before the pair join, not once per pair.  Clustering itself is
-    broadcast-Lloyd (:func:`kmeans_assign` — map-only assignment, no
-    point shuffle).  Deterministic end-to-end (rand()-free init, fixed
-    fold order), so the composition is value-exact against an unrolled
-    SQL oracle.
-
-    ``vectorized=True`` switches BOTH kernels to the numpy scale path:
-    matmul assignment (see :func:`kmeans_assign`) and one
-    ``applyInPandas`` Gram matrix per cluster for the pairwise stage —
-    required past ~10^7 pair-distance evaluations, where the interpreted
-    fold dominates.  Output values differ from the fold at ~1e-16 (BLAS
-    summation order), so the vectorized path is agreement-tested against
-    the exact one rather than oracle-hashed."""
-    from arrow_ballista_spark.operators.caching import tracked_persist
-    from arrow_ballista_spark.operators.similarity import (
-        cosine_with_norms,
-        norm,
-    )
-
+    the Lloyd assignment (vector riding along) once on the cluster id,
+    each cluster one Gram in one task.  Deterministic end-to-end
+    (rand()-free init, fixed fold order), so with ``vectorized=False``
+    the composition is value-exact against an unrolled SQL oracle;
+    ``vectorized=True`` uses BLAS for both the assignment and the Gram
+    (values differ at ~1e-16 — agreement-tested, not oracle-hashed)."""
     if k is None:
         # scale-adaptive default (the pq_rerank_topk adaptive-R
         # precedent): one bounded count() job sizes k ~ sqrt(n) so the
         # per-cluster quadratic stays O(n^1.5) total; callers that need
         # a value-pinned k (the oracle entries) pass it explicitly
         k = adaptive_cluster_count(embeddings.count())
-    if not vectorized:
-        e0 = embeddings.select(
-            F.col(id_col), F.col(vec_col).cast("array<double>").alias("v")
-        )
-        cent_rows = _collect_centroids(e0, k, id_col)
-        if cent_rows:
-            # driver-state Lloyd (see kmeans_assign): the assignment
-            # already carries the vector, so no re-join of
-            # (id, cluster) against the point set (one full point-set
-            # shuffle join saved)
-            literal = k * len(cent_rows[0][1]) <= _LITERAL_TERMS_MAX
-            assigned = _lloyd_driver(e0, cent_rows, iters, id_col, literal)
-            if literal:
-                # literal kernel + JVM pair self-join (the whitened
-                # dim-8 regime, where the interpreted per-pair folds
-                # are cheap and the Python boundary is not): eager
-                # tracked localCheckpoint materializes the Lloyd
-                # result once for both sides of the cluster self-join
-                # AND truncates the (literal-heavy) assignment lineage
-                # to a flat RDD scan (release via release_caches()).
-                from arrow_ballista_spark.operators.caching import (
-                    tracked_local_checkpoint,
-                )
-
-                e = tracked_local_checkpoint(
-                    assigned.select(
-                        F.col(id_col),
-                        "cluster",
-                        F.col("v").alias("vec"),
-                        norm(F.col("v")).alias("nrm"),
-                    )
-                )
-                return _pairs_exact(e, tau, id_col)
-            # above the literal cutoff (the dim-64 regime) the per-pair
-            # interpreted cosine folds dominate: one BIT-EXACT ordered
-            # Gram per cluster (applyInPandas) replaces the self-join —
-            # a single consumer, so the checkpoint goes too (r12)
-            return _pairs_exact_arrow(assigned, tau, id_col)
-    assign = kmeans_assign(
-        embeddings, k=k, iters=iters, id_col=id_col, vec_col=vec_col,
-        vectorized=vectorized,
+    assigned = _lloyd(
+        _points(embeddings, id_col, vec_col), k, iters, id_col, vectorized
     )
-    if vectorized:
-        return _pairs_vectorized(embeddings, assign, tau, id_col, vec_col)
-    # tracked persist: both sides of the cluster self-join read this —
-    # without it the whole Lloyd assignment (iters scans) runs twice
-    # (release via operators.caching.release_caches()).
-    e = tracked_persist(
-        embeddings.select(F.col(id_col), F.col(vec_col).alias("vec"))
-        .join(assign, id_col)
-        .select(
-            F.col(id_col),
-            "cluster",
-            "vec",
-            norm(F.col("vec")).alias("nrm"),
-        )
-    )
-    return _pairs_exact(e, tau, id_col)
+    return _pairs(assigned, tau, id_col, vectorized)
 
 
-def _pairs_exact(e: DataFrame, tau: float, id_col: str) -> DataFrame:
-    """Per-cluster exact pairwise cosine over a materialized
-    ``(id, cluster, vec, nrm)`` frame (see semantic_dedup_pairs)."""
-    from arrow_ballista_spark.operators.similarity import cosine_with_norms
-
-    a = e.select(
-        F.col(id_col).alias("id_a"),
-        F.col("cluster"),
-        F.col("vec").alias("va"),
-        F.col("nrm").alias("na"),
-    )
-    b = e.select(
-        F.col(id_col).alias("id_b"),
-        F.col("cluster").alias("cluster_b"),
-        F.col("vec").alias("vb"),
-        F.col("nrm").alias("nb"),
-    )
-    return (
-        a.join(
-            b,
-            (a.cluster == b.cluster_b) & (a.id_a < b.id_b),
-        )
-        .withColumn(
-            "cos_raw",
-            cosine_with_norms(
-                F.col("va"), F.col("vb"), F.col("na"), F.col("nb")
-            ),
-        )
-        .filter(F.col("cos_raw") >= tau)
-        .select("id_a", "id_b", "cluster", "cos_raw")
-    )
-
-
-def _pairs_vectorized(
-    embeddings: DataFrame,
-    assign: DataFrame,
-    tau: float,
-    id_col: str,
-    vec_col: str,
+def _pairs(
+    assigned: DataFrame, tau: float, id_col: str, vectorized: bool
 ) -> DataFrame:
-    """Per-cluster pairwise cosine via one numpy Gram matrix per cluster
-    (see semantic_dedup_pairs).  Memory per task is O(|cluster|^2)
-    doubles — bounded by keeping k ~ sqrt(n) so clusters stay ~sqrt(n)."""
-    import numpy as np
-    import pandas as pd
-
-    e = embeddings.select(F.col(id_col), F.col(vec_col).alias("vec")).join(
-        assign, id_col
-    )
+    """Per-cluster pairwise cosine as one Gram per cluster over the
+    ``(id_col, v, cluster)`` assignment.  Exact form: the Gram
+    accumulates one outer product per coordinate in order (``G += v_i ⊗
+    v_i`` — every pair's dot is the JVM ``aggregate`` left-to-right
+    fold), norms are the same ordered self-dot + sqrt, and ``cos = dot /
+    (na * nb)`` is the two operations of ``cosine_with_norms``.
+    Zero-norm rows are excluded like the JVM ``nullif`` NULL rows.
+    Memory per task is O(|cluster|^2) doubles — bounded by keeping
+    k ~ sqrt(n)."""
 
     def pairs(key, pdf):
+        import numpy as np
+        import pandas as pd
+
         ids = pdf[id_col].to_numpy()
-        V = np.array(pdf["vec"].tolist(), dtype=np.float64)
-        nrm = np.linalg.norm(V, axis=1)
-        ok = nrm > 0
-        ids, V, nrm = ids[ok], V[ok], nrm[ok]
-        if len(ids) < 2:
-            return pd.DataFrame(
-                {"id_a": [], "id_b": [], "cluster": [], "cos_raw": []}
-            ).astype({"id_a": "int64", "id_b": "int64",
-                      "cluster": "int64", "cos_raw": "float64"})
-        order = np.argsort(ids)
-        ids, V, nrm = ids[order], V[order], nrm[order]
-        S = (V @ V.T) / np.outer(nrm, nrm)
-        iu = np.triu_indices(len(ids), 1)
-        keep = S[iu] >= tau
-        return pd.DataFrame(
-            {
-                "id_a": ids[iu[0][keep]].astype("int64"),
-                "id_b": ids[iu[1][keep]].astype("int64"),
-                "cluster": np.full(int(keep.sum()), key[0], dtype="int64"),
-                "cos_raw": S[iu][keep].astype("float64"),
-            }
-        )
-
-    return e.groupBy("cluster").applyInPandas(
-        pairs, "id_a long, id_b long, cluster long, cos_raw double"
-    )
-
-
-def _pairs_exact_arrow(
-    assigned: DataFrame, tau: float, id_col: str
-) -> DataFrame:
-    """Per-cluster pairwise cosine as one BIT-EXACT ordered Gram per
-    cluster — the vectorized replacement for :func:`_pairs_exact` above
-    the literal cutoff (see semantic_dedup_pairs).  Exactness contract
-    (the r12 _pq_assign_arrow pattern): the Gram accumulates one outer
-    product per coordinate in order (``G += v_i ⊗ v_i`` — elementwise
-    float64, so every pair's dot is the same left-to-right fold the JVM
-    ``aggregate`` computes), norms are the same ordered self-dot +
-    sqrt, and ``cos = dot / (na * nb)`` is the same two operations as
-    ``cosine_with_norms``.  Zero-norm denominators are excluded exactly
-    like the JVM NULL (nullif) rows.  Memory per task is O(|cluster|^2)
-    doubles — bounded by keeping k ~ sqrt(n), the same budget as
-    :func:`_pairs_vectorized`.  Input: the ``(id_col, v, cluster)``
-    assignment (vector riding along — no re-join, single consumer, no
-    checkpoint).  Input contract (ADVICE r12): non-NULL fixed-dim
-    vectors — ``np.array(pdf['v'].tolist())`` raises on NULL/ragged
-    rows; the Lloyd assignment upstream only emits dense vectors."""
-    import numpy as np
-    import pandas as pd
-
-    def pairs(key, pdf):
-        empty = pd.DataFrame(
-            {"id_a": [], "id_b": [], "cluster": [], "cos_raw": []}
-        ).astype({"id_a": "int64", "id_b": "int64",
-                  "cluster": "int64", "cos_raw": "float64"})
-        ids = pdf[id_col].to_numpy()
-        if len(ids) < 2:
-            return empty
         V = np.array(pdf["v"].tolist(), dtype=np.float64)
-        order = np.argsort(ids)
-        ids, V = ids[order], V[order]
-        n, d = V.shape
-        G = np.zeros((n, n), dtype=np.float64)
-        accn = np.zeros(n, dtype=np.float64)
-        for i in range(d):  # coordinate order == the SQL fold
-            G += V[:, i : i + 1] * V[:, i][None, :]
-            accn += V[:, i] * V[:, i]
-        nrm = np.sqrt(accn)
-        den = nrm[:, None] * nrm[None, :]  # na * nb, the JVM multiply
+        if vectorized:
+            nrm = np.linalg.norm(V, axis=1)
+        else:
+            accn = np.zeros(len(ids), dtype=np.float64)
+            for i in range(V.shape[1]):  # coordinate order == the SQL fold
+                accn += V[:, i] * V[:, i]
+            nrm = np.sqrt(accn)
+        live = nrm > 0
+        order = np.argsort(ids[live])
+        ids, V, nrm = ids[live][order], V[live][order], nrm[live][order]
+        n = len(ids)
+        if vectorized:
+            G = V @ V.T
+        else:
+            G = np.zeros((n, n), dtype=np.float64)
+            for i in range(V.shape[1]):  # coordinate order == the SQL fold
+                G += V[:, i : i + 1] * V[:, i][None, :]
         iu = np.triu_indices(n, 1)
-        dg, dd = G[iu], den[iu]
+        dg, dd = G[iu], (nrm[:, None] * nrm[None, :])[iu]  # na * nb
         ok = dd > 0
         cos = np.zeros(len(dg), dtype=np.float64)
         cos[ok] = dg[ok] / dd[ok]
         keep = ok & (cos >= tau)
-        if not keep.any():
-            return empty
         return pd.DataFrame(
             {
                 "id_a": ids[iu[0][keep]].astype("int64"),

@@ -166,14 +166,15 @@ def _pq_assign_arrow(
     loop (§4.5).  Callers must pre-filter zero-norm rows when ``cents``
     is given (the serving-index population), as the JVM path always did.
 
-    Input contract (ADVICE r12): non-NULL, fixed-dimension vectors —
-    ``flatten().reshape(n, d)`` raises on NULL/ragged rows; all callers
-    feed dense fixture embeddings.  Zero-norm CENTROIDS are rejected at
-    setup below.
+    Input contract: ``similarity._vector_reader`` (NULL or ragged
+    vectors raise a ``ValueError`` naming the row).  Zero-norm
+    CENTROIDS are rejected at setup below.
     """
     import math
 
     from pyspark.sql import types as T
+
+    from arrow_ballista_spark.operators.similarity import _vector_reader
 
     m = len(books)
     sub = len(books[0][0])
@@ -201,6 +202,8 @@ def _pq_assign_arrow(
             "JVM nullif path ignores such centroids)"
         )
 
+    read = _vector_reader("_pq_assign_arrow", d)
+
     def assign(batches):
         import numpy as np
         import pyarrow as pa
@@ -220,7 +223,7 @@ def _pq_assign_arrow(
             ids = batch.column(0)
             va = batch.column(1)
             n = len(va)
-            V = va.flatten().to_numpy(zero_copy_only=False).reshape(n, d)
+            V = read(va)
             cols, names = [ids], [id_col]
             X = V
             if C is not None:

@@ -44,6 +44,42 @@ def _sql_array(vec: "list[float]") -> str:
     return "array(" + ", ".join(_dlit(x) for x in vec) + ")"
 
 
+def _vector_reader(op: str, dim: int):
+    """THE vector-batch contract of the Arrow kernels (k-means, LSH
+    buckets, PQ): returns ``read(va)`` turning an Arrow ``list<double>``
+    batch column into an ``(n, dim)`` float64 matrix.  A NULL vector, a
+    NULL element or a row whose length is not ``dim`` raises a
+    ``ValueError`` naming ``op``, the expected dim and the offending
+    batch row — the kernels' ordered folds have no value for such rows,
+    and a bare ``reshape`` would fail with a numpy shape message naming
+    none of that.  ``read`` is a nested function, so cloudpickle ships
+    it BY VALUE inside each kernel's closure: Python workers never need
+    to import this package (a session started outside the repo root
+    cannot)."""
+
+    def read(va):
+        import numpy as np
+
+        if va.null_count:
+            row = int(np.argmax(va.is_null().to_numpy(zero_copy_only=False)))
+            raise ValueError(
+                f"{op}: NULL vector at batch row {row}; expected dim {dim}"
+            )
+        lens = va.value_lengths().to_numpy(zero_copy_only=False)
+        bad = np.flatnonzero(lens != dim)
+        if bad.size:
+            raise ValueError(
+                f"{op}: vector of length {lens[bad[0]]} at batch row "
+                f"{bad[0]}; expected dim {dim}"
+            )
+        flat = va.flatten()
+        if flat.null_count:
+            raise ValueError(f"{op}: NULL element in a vector of dim {dim}")
+        return flat.to_numpy(zero_copy_only=False).reshape(len(va), dim)
+
+    return read
+
+
 def dot(a: Column, b: Column) -> Column:
     """Sequential-fold double dot product of two float array columns."""
     return F.aggregate(
@@ -209,23 +245,6 @@ def _infer_dim(df: DataFrame, vec: str, dim: int | None) -> int:
     return int(row[0])
 
 
-def lsh_bucket(vec_col: Column, planes: list[list[float]]) -> Column:
-    """Sign-bit bucket id from random hyperplanes (map-only).  The plane
-    arrays parse as ONE SQL literal each (r13): ``F.array(*[F.lit(x)
-    ...])`` crossed py4j once per element — n_tables * n_planes * dim
-    driver round-trips of pure plan build; :func:`_sql_array` is the
-    exact-float64 literal contract."""
-    bucket = F.lit(0).cast("bigint")
-    for i, plane in enumerate(planes):
-        p = F.expr(_sql_array(plane))
-        bucket = bucket.bitwiseOR(
-            F.when(
-                dot(vec_col, p) > 0, F.shiftleft(F.lit(1).cast("bigint"), i)
-            ).otherwise(F.lit(0).cast("bigint"))
-        )
-    return bucket
-
-
 def lsh_buckets_arrow(
     df: DataFrame,
     id_col: str,
@@ -234,21 +253,21 @@ def lsh_buckets_arrow(
     carry_vec: bool = False,
 ) -> DataFrame:
     """All n_tables hyperplane sign-bit buckets per row in ONE vectorized
-    Arrow pass — the bit-exact kernel form of n_tables x :func:`lsh_bucket`
-    (r13; the r12 ``_pq_assign_arrow`` recipe).  Returns
-    ``(id_col[, v], buckets array<long>)`` with ``buckets[t]`` ==
-    ``lsh_bucket(vec, all_planes[t])``.
+    Arrow pass (r13; the r12 ``_pq_assign_arrow`` recipe).  Returns
+    ``(id_col[, v], buckets array<long>)``; bit ``i`` of ``buckets[t]``
+    is set iff ``dot(vec, all_planes[t][i]) > 0`` under the sequential
+    double fold — the oracle's ``_sql_lsh_bucket`` definition.
 
-    Why: ``lsh_bucket`` evaluates one interpreted ``aggregate`` dot fold
-    per (row, table, plane) — ext_sim_topk_lsh at its registry settings
-    (32 tables x 8 planes x dim 64) pays ~16k interpreted multiply-adds
-    per corpus row, measured ~50 s at sf0.1 on the single scan
-    partition.  Here each batch accumulates ALL table/plane dots per
-    coordinate in order (``acc += v_i * p_i`` — elementwise float64,
-    identical to the SQL left-to-right fold, so every SIGN matches
-    bit-for-bit), then packs sign bits integer-exactly.
+    Why: an interpreted ``aggregate`` dot fold per (row, table, plane)
+    — ext_sim_topk_lsh at its registry settings (32 tables x 8 planes x
+    dim 64) — pays ~16k interpreted multiply-adds per corpus row,
+    measured ~50 s at sf0.1 on the single scan partition.  Here each
+    batch accumulates ALL table/plane dots per coordinate in order
+    (``acc += v_i * p_i`` — elementwise float64, identical to the SQL
+    left-to-right fold, so every SIGN matches bit-for-bit), then packs
+    sign bits integer-exactly.
 
-    Input contract (the kernel family's): non-NULL fixed-dim vectors.
+    Input contract: :func:`_vector_reader` (NULL or ragged vectors raise).
     ``carry_vec=True`` passes the vector through for consumers that
     re-rank candidates with exact cosine (one copy — the downstream
     explode duplicates it exactly as the column form did)."""
@@ -261,6 +280,8 @@ def lsh_buckets_arrow(
         [float(x) for x in p] for planes in all_planes for p in planes
     ]
 
+    read = _vector_reader("lsh_buckets_arrow", dim)
+
     def kern(batches):
         import numpy as np
         import pyarrow as pa
@@ -272,7 +293,7 @@ def lsh_buckets_arrow(
             ids = batch.column(0)
             va = batch.column(1)
             n = len(va)
-            V = va.flatten().to_numpy(zero_copy_only=False).reshape(n, dim)
+            V = read(va)
             D = np.zeros((n, n_tables * n_planes), dtype=np.float64)
             for i in range(dim):  # coordinate order == the SQL fold
                 D += V[:, i : i + 1] * P[:, i][None, :]

@@ -632,8 +632,8 @@ def winnowing_fingerprints(
       ``conv(substring(md5(...), 1, 15), 16, 10)`` (60 bits, positive);
     - window-min over int64 is order-free; per-doc distinct is a set.
 
-    Pinned by test against :func:`_winnowing_fingerprints_expr` (the
-    retired expression form) on adversarial token shapes.
+    Pinned by test against the retired expression form
+    (``tests/test_r13_kernels.py``) on adversarial token shapes.
     """
     from pyspark.sql import types as T
 
@@ -696,39 +696,6 @@ def winnowing_fingerprints(
         [df.schema[id_col], T.StructField("fp", T.LongType())]
     )
     return df.select(F.col(id_col), F.col(text_col)).mapInArrow(fps, schema)
-
-
-def _winnowing_fingerprints_expr(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    k: int = 3,
-    w: int = 4,
-) -> DataFrame:
-    """The retired pure-expression form of :func:`winnowing_fingerprints`
-    — kept as the bit-parity witness the kernel is pinned against (and
-    the shape the generated DuckDB oracle mirrors term by term)."""
-    toks = df.select(
-        F.col(id_col), F.expr(f"split({text_col}, ' +')").alias("_t")
-    ).where(F.size("_t") >= k)
-    grams = toks.select(
-        F.col(id_col),
-        F.expr(
-            f"transform(sequence(1, size(_t) - {k} + 1), p -> "
-            f"cast(conv(substring(md5(cast(concat_ws(' ', slice(_t, p, {k}))"
-            f" as binary)), 1, 15), 16, 10) as bigint))"
-        ).alias("_g"),
-    )
-    return grams.select(
-        F.col(id_col),
-        F.explode(
-            F.expr(
-                f"array_distinct(transform("
-                f"sequence(1, greatest(1, size(_g) - {w} + 1)), "
-                f"q -> array_min(slice(_g, q, {w}))))"
-            )
-        ).alias("fp"),
-    )
 
 
 def bpe_train_merges(

@@ -185,6 +185,7 @@ def test_jobs_registry(ctx):
     assert js[-1]["status"] == "SUCCESSFUL"
 
 
+@pytest.mark.slow
 def test_cli_one_shot():
     """python -m arrow_ballista_spark -e ... (ballista-cli analogue)."""
     import subprocess
@@ -437,6 +438,7 @@ def test_load_table_directory_layout(ctx, tmp_path):
     assert dict(back.dtypes)["ts"] == "timestamp_ntz"
 
 
+@pytest.mark.slow
 def test_package_shipped_to_python_workers(tmp_path):
     """Python-executed operators (UDTF, Python DataSource, stateful
     streaming) pickle their functions BY REFERENCE to engine modules; a
@@ -499,6 +501,7 @@ def test_convert_tbl_roundtrip(ctx, tmp_path):
     assert got == want
 
 
+@pytest.mark.slow
 def test_convert_cli(tmp_path):
     """The --convert CLI flag end-to-end in a subprocess."""
     import subprocess

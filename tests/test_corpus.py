@@ -177,27 +177,20 @@ def test_canonical_dedup_shuffle_path_matches_broadcast(spark):
 
 def test_kmeans_assignment_broadcasts_centroids(spark):
     """The Lloyd assignment stage must be map-only over the point scan —
-    never shuffle the point set against the centroids.  r12 gate, pinned
-    from both sides: below _LITERAL_TERMS_MAX distance terms the
-    centroids are bounded driver state embedded as exact literals (NO
-    join and NO exchange at all); above it the bit-exact Arrow kernel
-    (MapInArrow — centroids ride the closure, still no join, no
-    exchange, no point shuffle)."""
+    never shuffle the point set against the centroids.  The centroids
+    are bounded driver state riding the kernel closure: every shape
+    plans one MapInArrow with no join and no exchange.  k=4 and k=8 at
+    dim 64 sat on either side of the retired literal-chain cutoff (256
+    vs 512 distance terms); dim 8 is the whitened entries' regime."""
     from arrow_ballista_spark.operators.kmeans import kmeans_assign
 
     emb = load_table(spark, SF_DIR, "embeddings")
-    # k=4 x dim 64 = 256 terms <= 384: literal kernel, fully map-only
-    plan = explain.explain_str(kmeans_assign(emb, k=4, iters=2), "simple")
-    assert "CartesianProduct" not in plan
-    assert "Join" not in plan
-    assert "Exchange" not in plan
-    # k=8 x dim 64 = 512 terms > 384: vectorized Arrow kernel — also
-    # fully map-only since r12 session 4
-    plan8 = explain.explain_str(kmeans_assign(emb, k=8, iters=2), "simple")
-    assert "MapInArrow" in plan8
-    assert "CartesianProduct" not in plan8
-    assert "Join" not in plan8
-    assert "Exchange" not in plan8
+    emb8 = emb.select("vec_id", F.slice("embedding", 1, 8).alias("embedding"))
+    for df, k in [(emb, 4), (emb, 8), (emb8, 8)]:
+        plan = explain.explain_str(kmeans_assign(df, k=k, iters=2), "simple")
+        assert "MapInArrow" in plan, plan
+        for node in ("CartesianProduct", "Join", "Exchange"):
+            assert node not in plan, plan
 
 
 def test_merge_upsert_and_snapshot_diff_semantics(spark):

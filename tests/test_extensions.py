@@ -36,7 +36,33 @@ SF_REGENERATED_ORACLES = {
 }
 
 
-@pytest.mark.parametrize("name", EXT_NAMES)
+# oracle parametrizations in the slow tail (measured via --durations);
+# they run only with SPARK_GRAFT_SLOW_TESTS=1 (see tests/conftest.py)
+SLOW_ORACLES = {
+    "ext_dedup_canonical",
+    "ext_dedup_canonical_central",
+    "ext_dedup_incremental",
+    "ext_dedup_minhash_lsh",
+    "ext_dedup_ppjoin",
+    "ext_dedup_semantic_whitened",
+    "ext_dedup_simhash",
+    "ext_dedup_word_bigram_jaccard",
+    "ext_graph_pagerank",
+    "ext_graph_triangles",
+    "ext_multimodal_adpcm_stats",
+    "ext_pipeline_corpus_build",
+    "ext_sim_lsh_near_dup",
+    "ext_sim_topk_lsh",
+}
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        pytest.param(n, marks=pytest.mark.slow) if n in SLOW_ORACLES else n
+        for n in EXT_NAMES
+    ],
+)
 def test_extension_vs_duckdb(spark, oracle, name):
     qd = REG[name]
     if name in SF_REGENERATED_ORACLES:
@@ -96,6 +122,7 @@ def test_whitened_adaptive_vs_duckdb_at_driver_sf(spark):
     assert_same_results(df, make_oracle(SF_DIR_T2), qd.oracle)
 
 
+@pytest.mark.slow
 def test_lsh_topk_matches_bruteforce_on_candidates(spark):
     """Multi-probe LSH re-rank must return exact cosines; every returned
     (query, corpus) pair's cosine equals the brute-force value."""
@@ -175,6 +202,7 @@ def test_asof_join_no_purchase_rows_null(spark):
     assert bad == 0
 
 
+@pytest.mark.slow
 def test_lsh_cosine_near_dup_recall(spark):
     """At the operator's operating point (cosine >= 0.9 near-dups) the
     multi-table LSH must recall ~all planted duplicate pairs and return
@@ -1491,24 +1519,59 @@ def test_pq_assign_arrow_cell_and_residual_match_jvm(spark):
             assert dists[s] == best[0], (i, s)  # exact float equality
 
 
+def _sqdist(vec: str, cent: str):
+    """JVM reference: squared L2 as the left-to-right ``aggregate`` fold
+    (the DuckDB oracle's summation order)."""
+    return F.expr(
+        f"aggregate(sequence(1, size({vec})), cast(0.0 as double), "
+        f"(acc, i) -> acc + ({vec}[i-1] - {cent}[i-1]) * "
+        f"({vec}[i-1] - {cent}[i-1]))"
+    )
+
+
+def _pairs_exact(e, tau: float, id_col: str):
+    """JVM reference: per-cluster self-join + ``cosine_with_norms`` over
+    an ``(id, cluster, vec, nrm)`` frame."""
+    from arrow_ballista_spark.operators.similarity import cosine_with_norms
+
+    a = e.select(
+        F.col(id_col).alias("id_a"),
+        F.col("cluster"),
+        F.col("vec").alias("va"),
+        F.col("nrm").alias("na"),
+    )
+    b = e.select(
+        F.col(id_col).alias("id_b"),
+        F.col("cluster").alias("cluster_b"),
+        F.col("vec").alias("vb"),
+        F.col("nrm").alias("nb"),
+    )
+    return (
+        a.join(b, (a.cluster == b.cluster_b) & (a.id_a < b.id_b))
+        .withColumn(
+            "cos_raw",
+            cosine_with_norms(
+                F.col("va"), F.col("vb"), F.col("na"), F.col("nb")
+            ),
+        )
+        .filter(F.col("cos_raw") >= tau)
+        .select("id_a", "id_b", "cluster", "cos_raw")
+    )
+
+
 def test_kmeans_arrow_kernels_match_jvm_exact(spark):
-    """The r12 ordered-numpy k-means kernels must be BIT-identical to
-    the JVM exact paths they replaced above the literal cutoff:
-    _assign_exact_arrow == the broadcast crossJoin fold + min_by(cid,
-    struct(dist, cid)), and _pairs_exact_arrow == the cluster self-join
+    """The exact (ordered-numpy) k-means kernels must be BIT-identical
+    to the JVM forms: _assign_arrow == the broadcast crossJoin fold +
+    min_by(cid, struct(dist, cid)), and _pairs == the cluster self-join
     + cosine_with_norms filter.  Exact float equality on cos_raw — the
     oracle-equality argument rests on it.  Duplicate vectors exercise
     exact-tie paths."""
     import numpy as np
 
-    from pyspark.sql import functions as F
-
     from arrow_ballista_spark.operators.kmeans import (
-        _assign_exact_arrow,
+        _assign_arrow,
         _collect_centroids,
-        _pairs_exact,
-        _pairs_exact_arrow,
-        _sqdist,
+        _pairs,
     )
     from arrow_ballista_spark.operators.similarity import norm
 
@@ -1522,7 +1585,7 @@ def test_kmeans_arrow_kernels_match_jvm_exact(spark):
     )
     e = df.select("vec_id", F.col("embedding").alias("v"))
     cent_rows = _collect_centroids(e, 5, "vec_id")
-    kern = _assign_exact_arrow(e, cent_rows, "vec_id")
+    kern = _assign_arrow(e, cent_rows, "vec_id", False)
     # JVM reference: broadcast crossJoin fold + min_by
     cents = spark.createDataFrame(
         [(cid, c) for cid, c in cent_rows], "cid long, cent array<double>"
@@ -1550,10 +1613,70 @@ def test_kmeans_arrow_kernels_match_jvm_exact(spark):
     )
     kern_pairs = sorted(
         (r.id_a, r.id_b, r.cluster, r.cos_raw)
-        for r in _pairs_exact_arrow(assigned, 0.1, "vec_id").collect()
+        for r in _pairs(assigned, 0.1, "vec_id", False).collect()
     )
     assert kern_pairs == ref_pairs  # exact float equality
     assert len(kern_pairs) > 0
+
+
+def _bad_vector_frames(spark):
+    """(name, frame) inputs outside the dense-vector contract: the bad
+    row sits past the k-means seed ids, so it reaches the kernels."""
+    good = [(i, [float(i), 1.0, -0.5, 2.0]) for i in range(12)]
+    schema = "vec_id long, embedding array<double>"
+    null = good[:7] + [(7, None)] + good[8:]
+    ragged = good[:7] + [(7, [1.0, 2.0])] + good[8:]
+    return {
+        "null": (spark.createDataFrame(null, schema), "NULL vector"),
+        "ragged": (spark.createDataFrame(ragged, schema), "length 2"),
+    }
+
+
+@pytest.mark.parametrize("case", ["null", "ragged"])
+@pytest.mark.parametrize(
+    "kernel", ["kmeans_assign", "lsh_buckets_arrow", "_pq_assign_arrow"]
+)
+def test_vector_kernels_reject_null_and_ragged_rows(spark, kernel, case):
+    """Every Arrow vector kernel reads its batches through the one
+    similarity._vector_reader contract: a NULL or wrong-length vector
+    raises a ValueError naming the operator, the expected dim and the
+    row's fault — never a bare numpy reshape error."""
+    from arrow_ballista_spark.operators import kmeans, pq, similarity
+
+    df, fault = _bad_vector_frames(spark)[case]
+    run = {
+        "kmeans_assign": lambda: kmeans.kmeans_assign(df, k=2, iters=2),
+        "lsh_buckets_arrow": lambda: similarity.lsh_buckets_arrow(
+            df, "vec_id", "embedding", [[[1.0, 0.0, 0.0, 0.0]]]
+        ),
+        "_pq_assign_arrow": lambda: pq._pq_assign_arrow(
+            df, "vec_id", "embedding", [[[0.0, 0.0], [1.0, 1.0]]] * 2
+        ),
+    }[kernel]
+    with pytest.raises(Exception) as err:
+        run().collect()
+    msg = str(err.value)
+    assert "ValueError" in msg and kernel in msg, msg[-2000:]
+    assert "expected dim 4" in msg and fault in msg, msg[-2000:]
+
+
+@pytest.mark.parametrize("vectorized", [False, True], ids=["exact", "blas"])
+def test_kmeans_empty_corpus_returns_empty_frames(spark, vectorized):
+    """A zero-row corpus has no seed: both k-means consumers return zero
+    rows with their usual schemas, on both kernels."""
+    from arrow_ballista_spark.operators.kmeans import (
+        kmeans_assign,
+        semantic_dedup_pairs,
+    )
+
+    empty = spark.createDataFrame([], "vec_id long, embedding array<double>")
+    a = kmeans_assign(empty, k=3, iters=2, vectorized=vectorized)
+    p = semantic_dedup_pairs(empty, k=3, iters=2, vectorized=vectorized)
+    assert a.schema.simpleString() == "struct<vec_id:bigint,cluster:bigint>"
+    assert p.schema.simpleString() == (
+        "struct<id_a:bigint,id_b:bigint,cluster:bigint,cos_raw:double>"
+    )
+    assert a.collect() == [] and p.collect() == []
 
 
 def test_minhash_sigs_arrow_matches_column_form(spark):
@@ -2253,6 +2376,7 @@ def test_bpe_train_matches_python_reference(spark):
     assert got == want
 
 
+@pytest.mark.slow
 def test_bpe_driver_loop_matches_distributed_fallback(spark):
     """The r8 driver-side merge loop (incremental pair maintenance +
     lazy heap) must produce byte-identical merges to the distributed
@@ -2408,6 +2532,7 @@ def test_train_coarse_centroids_rejects_undersized_sample(spark):
         train_coarse_centroids(c, "corpus_id", "embedding", n_cells=8)
 
 
+@pytest.mark.slow
 def test_codec_oracles_nonascii_documents(spark, tmp_path):
     """VERDICT r8 item 2: the codec entries' ascii(substring(...)) byte
     indexing silently assumed ASCII corpora.  Both halves now map every

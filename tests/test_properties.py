@@ -7,6 +7,7 @@ from __future__ import annotations
 
 from bisect import bisect_right
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -24,6 +25,7 @@ _ts = st.integers(min_value=0, max_value=1000)
 _key = st.integers(min_value=0, max_value=3)
 
 
+@pytest.mark.slow
 @given(
     left=st.lists(st.tuples(_key, _ts), min_size=1, max_size=25),
     right=st.lists(st.tuples(_key, _ts, st.integers(-100, 100)), max_size=25),
@@ -56,6 +58,7 @@ def test_asof_join_matches_reference(spark, left, right):
         assert out[i] == want, f"left row {i} (k={k}, ts={t})"
 
 
+@pytest.mark.slow
 @given(
     rows=st.lists(
         st.tuples(st.integers(0, 5), st.integers(0, 1000)),
@@ -79,6 +82,7 @@ def test_exact_dedup_matches_reference(spark, rows):
     assert got == want
 
 
+@pytest.mark.slow
 @given(
     texts=st.lists(
         st.text(
@@ -126,6 +130,7 @@ def test_new_session_isolates_views(spark):
     assert "iso_view" not in ctx1.tables()
 
 
+@pytest.mark.slow
 @given(
     edges=st.lists(
         st.tuples(st.integers(0, 15), st.integers(0, 15)).filter(
@@ -245,6 +250,7 @@ def test_semantic_dedup_adaptive_k_default(spark):
     assert auto == explicit
 
 
+@pytest.mark.slow
 def test_iterative_operators_reliable_checkpoint_dir(spark, tmp_path):
     """checkpoint_dir= switches the round boundary from localCheckpoint
     (executor-memory, dies with the executor) to df.checkpoint() into a
@@ -252,7 +258,6 @@ def test_iterative_operators_reliable_checkpoint_dir(spark, tmp_path):
     Results must be identical and the directory must actually receive
     checkpoint files."""
     from arrow_ballista_spark.operators.dedup import connected_components
-    from arrow_ballista_spark.operators.kmeans import kmeans_assign
     from arrow_ballista_spark.operators.pagerank import pagerank
 
     ckpt = str(tmp_path / "ckpt")
@@ -286,21 +291,6 @@ def test_iterative_operators_reliable_checkpoint_dir(spark, tmp_path):
         for r in pagerank(nodes, edges, checkpoint_dir=ckpt).collect()
     }
     assert pr_dur == pr_base
-
-    emb = spark.createDataFrame(
-        [(i, [float(i % 4), float(i % 3)]) for i in range(40)],
-        "vec_id long, embedding array<double>",
-    )
-    km_base = {
-        r.vec_id: r.cluster for r in kmeans_assign(emb, k=3, iters=3).collect()
-    }
-    km_dur = {
-        r.vec_id: r.cluster
-        for r in kmeans_assign(
-            emb, k=3, iters=3, checkpoint_dir=ckpt
-        ).collect()
-    }
-    assert km_dur == km_base
 
 
 def test_cc_survives_source_deletion_after_checkpoint(spark, tmp_path):
@@ -337,6 +327,7 @@ def test_cc_survives_source_deletion_after_checkpoint(spark, tmp_path):
     release_checkpoints()
 
 
+@pytest.mark.slow
 def test_cc_completes_through_injected_task_failure(tmp_path):
     """Failure injection end-to-end: a once-failing mapper in the CC
     input (fails every task until a flag file exists) under
@@ -455,6 +446,7 @@ def test_reliable_checkpoint_concurrent_dir_conflict(spark, tmp_path):
         caching.release_checkpoints()
 
 
+@pytest.mark.slow
 @given(
     edges=st.lists(
         st.tuples(st.integers(0, 30), st.integers(0, 30)).filter(
@@ -496,6 +488,7 @@ def test_connected_components_sparse_trees_match_union_find(spark, edges):
     assert got == want
 
 
+@pytest.mark.slow
 @given(
     base=st.dictionaries(st.integers(0, 20), st.integers(0, 5), max_size=15),
     ups=st.dictionaries(st.integers(0, 25), st.integers(0, 5), max_size=10),
@@ -680,6 +673,7 @@ def test_semantic_dedup_subset_of_exact_pairs(spark):
     assert sem.exceptAll(exact).count() == 0
 
 
+@pytest.mark.slow
 @settings(max_examples=8, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 @given(
@@ -1494,6 +1488,7 @@ def test_tiff_jpeg_gates():
         decode_tiff(bytes(shared))
 
 
+@pytest.mark.slow
 @given(
     n=st.integers(4, 30),
     e=st.integers(3, 80),

@@ -8,15 +8,40 @@ import pytest
 from pyspark.sql import functions as F
 
 
+def _winnowing_fingerprints_expr(df, text_col, id_col, k=3, w=4):
+    """The retired pure-expression form of
+    ``text.winnowing_fingerprints`` — the bit-parity witness the kernel
+    is pinned against (and the shape the generated DuckDB oracle mirrors
+    term by term)."""
+    toks = df.select(
+        F.col(id_col), F.expr(f"split({text_col}, ' +')").alias("_t")
+    ).where(F.size("_t") >= k)
+    grams = toks.select(
+        F.col(id_col),
+        F.expr(
+            f"transform(sequence(1, size(_t) - {k} + 1), p -> "
+            f"cast(conv(substring(md5(cast(concat_ws(' ', slice(_t, p, {k}))"
+            f" as binary)), 1, 15), 16, 10) as bigint))"
+        ).alias("_g"),
+    )
+    return grams.select(
+        F.col(id_col),
+        F.explode(
+            F.expr(
+                f"array_distinct(transform("
+                f"sequence(1, greatest(1, size(_g) - {w} + 1)), "
+                f"q -> array_min(slice(_g, q, {w}))))"
+            )
+        ).alias("fp"),
+    )
+
+
 def test_winnowing_kernel_matches_expression_form(spark):
     """The mapInArrow fingerprint kernel must be BIT-identical to the
     retired split/md5/window-min expression chain (which is also the
     shape the generated DuckDB oracle mirrors) — including leading/
     trailing/multiple spaces, NULLs, short docs, and non-ASCII."""
-    from arrow_ballista_spark.operators.text import (
-        _winnowing_fingerprints_expr,
-        winnowing_fingerprints,
-    )
+    from arrow_ballista_spark.operators.text import winnowing_fingerprints
 
     rows = [
         (1, "a b c d e f g"),
@@ -107,16 +132,17 @@ def test_winnowing_bucket_pairs_match_self_join_form(spark):
     assert got == want and got, got
 
 
-def test_lloyd_update_partials_match_posexplode_means(spark):
-    """The fused assignment+partial-sum kernel's ``round(sum/count, 6)``
-    means must equal the retired posexplode + ``round(avg, 6)`` means,
-    and the driver-state Lloyd must produce the identical final
-    assignment."""
+@pytest.mark.parametrize("vectorized", [False, True], ids=["exact", "blas"])
+def test_lloyd_update_partials_match_posexplode_means(spark, vectorized):
+    """The fused assignment+partial-sum update's ``round(sum/count, 6)``
+    means must equal the retired posexplode + ``round(avg, 6)`` means
+    over the same assignment, on both kernels, and the driver-state
+    Lloyd loop must be deterministic."""
     from arrow_ballista_spark.operators.kmeans import (
-        _assign_exact_arrow,
+        _assign_arrow,
         _collect_centroids,
-        _lloyd_driver,
-        _update_partials_arrow,
+        _lloyd,
+        _update,
     )
 
     rows = [
@@ -128,7 +154,7 @@ def test_lloyd_update_partials_match_posexplode_means(spark):
     cent_rows = _collect_centroids(e, 4, "vec_id")
 
     # old update: posexplode + round(avg, 6) over the assignment
-    assigned = _assign_exact_arrow(e, cent_rows, "vec_id")
+    assigned = _assign_arrow(e, cent_rows, "vec_id", vectorized)
     old = {
         (int(r["cluster"]), int(r["pos"])): float(r["m"])
         for r in assigned.select(
@@ -139,22 +165,20 @@ def test_lloyd_update_partials_match_posexplode_means(spark):
         .collect()
     }
     new = {
-        (int(r["cluster"]), int(r["pos"])): float(r["m"])
-        for r in _update_partials_arrow(e, cent_rows)
-        .groupBy("cluster", "pos")
-        .agg(F.round(F.try_divide(F.sum("s"), F.sum("n")), 6).alias("m"))
-        .collect()
+        (cid, pos): m
+        for cid, means in _update(e, cent_rows, vectorized)
+        for pos, m in enumerate(means)
     }
     assert new == old
 
     # end-to-end: the full driver-state loop is deterministic over it
     out1 = sorted(
         (r["vec_id"], r["cluster"])
-        for r in _lloyd_driver(e, cent_rows, 3, "vec_id", False).collect()
+        for r in _lloyd(e, 4, 3, "vec_id", vectorized).collect()
     )
     out2 = sorted(
         (r["vec_id"], r["cluster"])
-        for r in _lloyd_driver(e, cent_rows, 3, "vec_id", False).collect()
+        for r in _lloyd(e, 4, 3, "vec_id", vectorized).collect()
     )
     assert out1 == out2 and len(out1) == 40
 
@@ -209,7 +233,7 @@ def test_lloyd_arrow_update_drops_empty_clusters(spark):
     not crash on the NULL sum/0 mean (r13 review finding)."""
     from arrow_ballista_spark.operators.kmeans import (
         _collect_centroids,
-        _lloyd_driver,
+        _lloyd,
     )
 
     rows = [(0, [1.0, 2.0, 3.0]), (1, [1.0, 2.0, 3.0])] + [
@@ -220,7 +244,7 @@ def test_lloyd_arrow_update_drops_empty_clusters(spark):
     assert cent_rows[0][1] == cent_rows[1][1]  # duplicate seeds
     out = sorted(
         (r["vec_id"], r["cluster"])
-        for r in _lloyd_driver(e, cent_rows, 3, "vec_id", False).collect()
+        for r in _lloyd(e, 3, 3, "vec_id", False).collect()
     )
     assert len(out) == 30
     assert all(c in (0, 1, 2) for _, c in out)
