@@ -37,6 +37,15 @@ if TYPE_CHECKING:  # pragma: no cover
     from arrow_ballista_spark.context import BallistaContext
 
 
+def codegen_compilations(spark) -> int:
+    """Whole-stage-codegen classes this JVM has compiled since it started
+    (``CodegenMetrics``; every ``CodeGenerator`` cache miss is one).  In
+    local mode that covers driver and executors; on a cluster, the
+    driver only."""
+    cm = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return cm.METRIC_COMPILATION_TIME().getCount()
+
+
 class MonitoringServer:
     """HTTP facade mirroring the reference scheduler's REST routes."""
 
@@ -199,7 +208,11 @@ class MonitoringServer:
         (``ballista/scheduler/src/metrics/prometheus.rs:30-120``):
         job_exec_time_seconds / planning_time_ms histograms,
         job_{submitted,completed,failed,cancelled}_total counters, and the
-        pending_task_queue_size gauge."""
+        pending_task_queue_size gauge.  Two engine families follow them:
+        the codegen_compilations_total counter and the
+        codegen_cache_max_entries gauge, the session's cap on compiled
+        classes kept for reuse (Spark's stock 100 in a vanilla session;
+        see ``session.CODEGEN_CACHE_MAX_ENTRIES``)."""
         jobs = list(getattr(self.ctx, "_jobs", []))
         statuses = [h.status() for h in jobs]
         exec_times = [
@@ -207,7 +220,8 @@ class MonitoringServer:
             if s == "SUCCESSFUL" and (d := h.duration_seconds()) is not None
         ]
         plan_times = [h._planning_ms for h in jobs]
-        sc = self.ctx.spark.sparkContext
+        spark = self.ctx.spark
+        sc = spark.sparkContext
         tracker = sc.statusTracker()
         pending = 0
         for jid in tracker.getActiveJobsIds():
@@ -253,6 +267,14 @@ class MonitoringServer:
         out += ["# HELP pending_task_queue_size Number of pending tasks",
                 "# TYPE pending_task_queue_size gauge",
                 f"pending_task_queue_size {pending}"]
+        out += counter("codegen_compilations_total",
+                       "Counter of whole-stage-codegen class compilations",
+                       codegen_compilations(spark))
+        cap = spark.conf.get("spark.sql.codegen.cache.maxEntries")
+        out += ["# HELP codegen_cache_max_entries Compiled classes the "
+                "codegen cache keeps for reuse",
+                "# TYPE codegen_cache_max_entries gauge",
+                f"codegen_cache_max_entries {cap}"]
         return "\n".join(out) + "\n"
 
     def metrics(self) -> dict:

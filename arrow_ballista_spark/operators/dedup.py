@@ -898,13 +898,13 @@ def simhash_near_dup_pairs(
 
 
 #: Driver union-find pair cap (r13): below this many near-dup pairs the
-#: CC labeling collects the pair list once and runs exact min-label
-#: union-find on the driver — the BPE-driver-loop precedent
+#: CC labeling fetches the pair list once as Arrow and runs exact
+#: min-label union-find on the driver — the BPE-driver-loop precedent
 #: (operators/text.py:_BPE_DRIVER_VOCAB_CAP).  Sizing is by PYTHON
-#: driver memory, not raw longs: collected Rows cost ~10-20x the
-#: 16-byte payload (Row objects + the union-find dicts + the label
+#: driver memory, not raw longs: the pair columns as Python ints cost
+#: ~10x the 16-byte payload (plus the union-find dicts and the label
 #: tuples and their two Arrow columns, types.local_frame), so 500k
-#: pairs is ~100-250 MB peak — safe even on a default 1g external
+#: pairs is ~100-200 MB peak — safe even on a default 1g external
 #: driver.  The distributed
 #: pointer-jumping loop costs ~1 Spark job per round plus the
 #: edge/label materializations (~10 jobs at sf0.1, each with
@@ -915,10 +915,10 @@ def simhash_near_dup_pairs(
 _CC_DRIVER_PAIRS_CAP = 500_000
 
 
-def _cc_driver(spark, rows, a_col: str, b_col: str, id_type, stats):
-    """Exact min-label union-find over a collected pair list — the
-    bounded small-graph path of :func:`connected_components` (labels ==
-    smallest id reachable, the same values the distributed loop
+def _cc_driver(spark, table, id_type, stats):
+    """Exact min-label union-find over a fetched two-column pair table —
+    the bounded small-graph path of :func:`connected_components` (labels
+    == smallest id reachable, the same values the distributed loop
     computes)."""
     parent: dict = {}
 
@@ -930,8 +930,7 @@ def _cc_driver(spark, rows, a_col: str, b_col: str, id_type, stats):
             parent[x], x = r, parent[x]
         return r
 
-    for r in rows:
-        a, b = r[0], r[1]
+    for a, b in zip(table.column(0).to_pylist(), table.column(1).to_pylist()):
         if a not in parent:
             parent[a] = a
         if b not in parent:
@@ -1031,11 +1030,11 @@ def connected_components(
         and checkpoint_dir is None
         and pairs.schema[b_col].dataType == key_type
     ):
-        # r13 small-graph fast path (see _CC_DRIVER_PAIRS_CAP): a
-        # bounded limit-COUNT decides (JVM-side — no Python rows ship
-        # on the over-cap path, where a limit-collect would fetch and
-        # then discard cap+1 Rows); at or under the cap the cached
-        # pairs collect once and union-find labels them exactly.
+        # r13 small-graph fast path (see _CC_DRIVER_PAIRS_CAP): ONE
+        # bounded Arrow fetch both decides and carries the pairs (a
+        # limit-count probe plus a Row collect runs two more Spark
+        # jobs).  Over the cap the fetched cap+1 rows are dropped
+        # (~8 MB of Arrow at the 500k cap) and the loop below runs.
         # ``stats["rounds"]`` reports 0 on this path — the log-round
         # pins force the distributed loop with driver_pairs_cap=0.
         # A caller passing checkpoint_dir wants durable round recovery
@@ -1043,15 +1042,10 @@ def connected_components(
         # Mismatched key types (int id_a, long id_b) also stay on the
         # loop, whose union lets Spark widen them: the driver frame has
         # ONE id type for both output columns.
-        if pairs.limit(driver_pairs_cap + 1).count() <= driver_pairs_cap:
-            return _cc_driver(
-                pairs.sparkSession,
-                pairs.collect(),
-                a_col,
-                b_col,
-                key_type,
-                stats,
-            )
+        head = pairs.limit(driver_pairs_cap + 1).toArrow()
+        if head.num_rows <= driver_pairs_cap:
+            return _cc_driver(pairs.sparkSession, head, key_type, stats)
+        del head
     edges = pairs.select(
         F.col(a_col).alias("src"), F.col(b_col).alias("dst")
     ).unionByName(
@@ -1351,6 +1345,14 @@ def bloom_filter_dedup(
     )
 
 
+#: Largest ``max_df`` for which :func:`winnowing_dedup_pairs` takes the
+#: ``collect_list`` bucket form: every bucket row copies its whole id
+#: list into each exploded row, O(max_df^2) payload per fingerprint, so
+#: the form is safe only for caps of "a few hundred" documents.  Above
+#: it the 16-byte-row self-join runs.
+_WINNOW_BUCKET_MAX_DF = 256
+
+
 def winnowing_dedup_pairs(
     df: DataFrame,
     text_col: str,
@@ -1413,17 +1415,17 @@ def winnowing_dedup_pairs(
         )
         fps = fps.join(F.broadcast(hot), "fp", "left_anti")
     cnt = fps.groupBy(id_col).agg(F.count(F.lit(1)).alias("_n"))
-    # r13 (§2.4): with a max_df cap in force, ONE exchange groups fps
-    # into per-fingerprint id lists (bounded by the cap) and a map-side
-    # double explode emits the shared-fp pair rows — the fp self-join
-    # shuffled the fps table twice for the same multiset; per-pair
-    # counts are identical (ids are distinct per fp: fingerprints are
-    # per-doc distinct).  WITHOUT a cap the bucket form is the measured
-    # PPJoin pathology (the first explode copies the whole per-key
-    # array into every emitted row — O(df^2) payload on a hot
-    # boilerplate fingerprint), so max_df=None keeps the 16-byte-row
-    # self-join.
-    if max_df is not None:
+    # r13 (§2.4): with a small max_df cap in force, ONE exchange groups
+    # fps into per-fingerprint id lists (bounded by the cap) and a
+    # map-side double explode emits the shared-fp pair rows — the fp
+    # self-join shuffled the fps table twice for the same multiset;
+    # per-pair counts are identical (ids are distinct per fp:
+    # fingerprints are per-doc distinct).  Without a cap, or with one
+    # above _WINNOW_BUCKET_MAX_DF, the bucket form is the measured PPJoin
+    # pathology (the first explode copies the whole per-key array into
+    # every emitted row — O(df^2) payload on a hot boilerplate
+    # fingerprint), so those keep the 16-byte-row self-join.
+    if max_df is not None and max_df <= _WINNOW_BUCKET_MAX_DF:
         pairs = (
             fps.groupBy("fp")
             .agg(F.collect_list(F.col(id_col)).alias("_ids"))

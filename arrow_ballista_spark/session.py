@@ -14,6 +14,15 @@ Scale notes (100 TB design):
  - ``spark.sql.shuffle.partitions`` is only the *initial* number; AQE
    re-plans.  On a real cluster raise it to ~2-3x total cores.
  - Arrow transfer is enabled for the Pandas-UDF extension operators.
+ - Whole-stage codegen pays off only when compiled classes are reused.
+   Spark keeps them in ``CodeGenerator``'s LRU cache, 100 classes by
+   default.  One pass of ``bench.py``'s timed entries compiles 1155
+   distinct classes and one ``llm_pipeline`` sweep about 130, so at 100
+   every warm operation compiles its classes again in Janino.
+   ``CODEGEN_CACHE_MAX_ENTRIES`` sizes the cache to twice that working
+   set.  It is a static conf: it takes effect only in sessions built
+   here (it travels in SparkConf, so executors on a cluster get it too);
+   a vanilla session keeps Spark's 100.
 """
 
 from __future__ import annotations
@@ -23,6 +32,12 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+#: ``spark.sql.codegen.cache.maxEntries``: the next round number above
+#: twice the 1155 distinct classes one pass of ``bench.py``'s timed
+#: entries compiles (sf0.01, unbounded cache).  Guava splits the cap over
+#: 4 segments, so each segment holds 625.
+CODEGEN_CACHE_MAX_ENTRIES = 2500
 
 
 def get_session(
@@ -60,6 +75,11 @@ def get_session(
         # reference collects per-partition statistics (ballista.collect_
         # statistics, config.rs:39) -> Spark CBO over ANALYZE'd tables
         .config("spark.sql.cbo.enabled", "true")
+        # compiled whole-stage classes outlive one query (static conf)
+        .config(
+            "spark.sql.codegen.cache.maxEntries",
+            str(CODEGEN_CACHE_MAX_ENTRIES),
+        )
         # runtime semi-join reduction: build a bloom filter from the
         # selective side of a shuffle join and push it into the big side's
         # scan.  Engages only past the default size thresholds (10 GB

@@ -103,10 +103,19 @@ def test_api_metrics_prometheus_exposition(served):
     """?format=prometheus (and Accept: text/plain) serves the text
     exposition with the reference collector's seven metric families
     (scheduler/src/metrics/prometheus.rs:30-120): two histograms, four
-    job counters, one gauge — scrape-parseable lines."""
+    job counters, one gauge — scrape-parseable lines — plus the engine's
+    codegen compile counter (never falling between scrapes) and its
+    codegen cache cap gauge."""
     import re
 
+    from arrow_ballista_spark.session import CODEGEN_CACHE_MAX_ENTRIES
+
     ctx, srv = served
+
+    def compiled(body: str) -> int:
+        return int(re.search(r"^codegen_compilations_total (\d+)$", body, re.M)[1])
+
+    first = compiled(_get(f"{srv.url}/api/metrics?format=prometheus")[1])
     h = ctx.submit("SELECT COUNT(*) AS n FROM mon_nation")
     h.result(timeout=60)
     code, body = _get(f"{srv.url}/api/metrics?format=prometheus")
@@ -119,8 +128,14 @@ def test_api_metrics_prometheus_exposition(served):
         ("job_failed_total", "counter"),
         ("job_cancelled_total", "counter"),
         ("pending_task_queue_size", "gauge"),
+        ("codegen_compilations_total", "counter"),
+        ("codegen_cache_max_entries", "gauge"),
     ]:
         assert f"# TYPE {fam} {typ}" in body, fam
+    assert first <= compiled(body)
+    assert re.search(
+        rf"^codegen_cache_max_entries {CODEGEN_CACHE_MAX_ENTRIES}$", body, re.M
+    )
     # counters reflect the job registry
     submitted = int(re.search(r"^job_submitted_total (\d+)", body, re.M)[1])
     completed = int(re.search(r"^job_completed_total (\d+)", body, re.M)[1])

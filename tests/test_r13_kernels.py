@@ -73,36 +73,52 @@ def test_winnowing_kernel_matches_expression_form(spark):
     assert a, "expected non-empty fingerprints"
 
 
-def test_winnowing_bucket_pairs_match_self_join_form(spark):
+@pytest.mark.parametrize("over_gate", [0, 1], ids=["at_gate", "over_gate"])
+def test_winnowing_bucket_pairs_match_self_join_form(spark, over_gate):
     """winnowing_dedup_pairs' single-exchange bucket pair generator
     (groupBy(fp) + collect_list + double explode — safe there because
     max_df caps bucket size) must emit exactly the pairs and shared-fp
-    counts of the retired fp self-join, including the df cap and the
-    min_shared filter."""
+    counts of the fp self-join, including the df cap and the min_shared
+    filter.  max_df = _WINNOW_BUCKET_MAX_DF takes the bucket form, one
+    more takes the self-join; the boilerplate run sits in exactly
+    _WINNOW_BUCKET_MAX_DF + 1 documents, so the cap drops it on the
+    first side and keeps it on the second."""
     from arrow_ballista_spark.operators.caching import release_caches
-    from arrow_ballista_spark.operators.dedup import winnowing_dedup_pairs
+    from arrow_ballista_spark.operators.dedup import (
+        _WINNOW_BUCKET_MAX_DF,
+        winnowing_dedup_pairs,
+    )
     from arrow_ballista_spark.operators.text import winnowing_fingerprints
 
+    max_df = _WINNOW_BUCKET_MAX_DF + over_gate
     rows = [
         (i,
          "alpha beta gamma delta epsilon zeta eta theta iota kappa "
          + f"tail{i} more{i} filler{i} words{i} end{i}")
         for i in range(1, 5)
     ] + [(7, "totally different words here nothing shared"),
-         (8, "alpha beta gamma delta epsilon zeta eta theta other end")]
+         (8, "alpha beta gamma delta epsilon zeta eta theta other end"),
+         (9, "red orange yellow green blue indigo violet black white grey"),
+         (10, "red orange yellow green blue indigo violet black white pink")]
+    rows += [
+        (100 + i, "alpha beta gamma delta epsilon zeta eta theta "
+                  + f"pad{i} x{i} y{i} z{i}")
+        for i in range(_WINNOW_BUCKET_MAX_DF + 1 - 5)
+    ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = sorted(
-        map(str, winnowing_dedup_pairs(
-            df, "text", "doc_id", k=3, w=4, min_shared=2, max_df=8
-        ).collect())
+    pairs_df = winnowing_dedup_pairs(
+        df, "text", "doc_id", k=3, w=4, min_shared=2, max_df=max_df
     )
+    bucket_form = "collect_list" in str(pairs_df._jdf.queryExecution().analyzed())
+    assert bucket_form is not bool(over_gate)
+    got = sorted(map(str, pairs_df.collect()))
     release_caches()
 
     # reference: the retired fp self-join, inlined
     fps = winnowing_fingerprints(df, "text", "doc_id", k=3, w=4)
     hot = (
         fps.groupBy("fp").agg(F.count(F.lit(1)).alias("_df"))
-        .where(F.col("_df") > 8).select("fp")
+        .where(F.col("_df") > max_df).select("fp")
     )
     fps = fps.join(F.broadcast(hot), "fp", "left_anti")
     cnt = fps.groupBy("doc_id").agg(F.count(F.lit(1)).alias("_n"))
@@ -129,7 +145,11 @@ def test_winnowing_bucket_pairs_match_self_join_form(spark):
                          + 0.5) / 10000.0).alias("jaccard"),
             ).collect())
     )
-    assert got == want and got, got
+    assert got == want
+    # the near-dup pair survives both caps; the boilerplate clique only
+    # the larger one
+    assert any(g.startswith("Row(id_a=9, id_b=10,") for g in got), got
+    assert (len(got) > 1000) is bool(over_gate), len(got)
 
 
 @pytest.mark.parametrize("vectorized", [False, True], ids=["exact", "blas"])
