@@ -104,13 +104,15 @@ class JobHandle:
         return "CANCELLED" if self._cancel_requested else "FAILED"
 
     def cancel(self, wait_for_start: float = 30.0) -> bool:
-        """Cancel the job group.  cancelJobGroup only reaches *active* jobs,
-        so wait for the first Spark job of this group to register (mirrors
-        the reference's CancelJob, which addresses an already-queued
-        job_id).  Returns False if no Spark job appeared within
-        ``wait_for_start`` and the query is still running — the
-        cancellation could NOT be delivered (e.g. the driver is still
-        planning/listing files) and the caller must retry or abandon."""
+        """Cancel the job group: its active Spark jobs and every job it
+        submits later — an adaptive query runs one Spark job per query
+        stage, and cancelling only the active ones let the next stage's
+        job run to completion when the first finished in between.  Waits
+        for the first Spark job of this group to register (mirrors the
+        reference's CancelJob, which addresses an already-queued job_id).
+        Returns False if no Spark job appeared within ``wait_for_start``
+        and the query is still running (e.g. the driver is still
+        planning/listing files); later jobs are cancelled all the same."""
         import time
 
         self._cancel_requested = True
@@ -122,7 +124,9 @@ class JobHandle:
                 delivered = True
                 break
             time.sleep(0.05)
-        self._spark.sparkContext.cancelJobGroup(self.job_id)
+        self._spark.sparkContext._jsc.sc().cancelJobGroupAndFutureJobs(
+            self.job_id
+        )
         return delivered or self._done.is_set()
 
     def result(self, timeout: float | None = None) -> list:

@@ -1,13 +1,14 @@
 """Deduplication operators for large-scale training-data pipelines.
 
-Everything here is built from JVM-side ``pyspark.sql.functions`` (no Python
-UDFs in the hot path) so it whole-stage-codegens and scales linearly:
+Everything here is built from JVM-side ``pyspark.sql.functions`` or
+vectorized Arrow kernels (no row-at-a-time Python UDFs in the hot path),
+so it scales linearly:
 
 - :func:`exact_dedup` — hash-groupBy keep-first; one shuffle on the dedup
   key (map-side partial aggregation combines within partitions first).
-- :func:`char_shingles` / :func:`minhash_signature` — map-only (zero
-  shuffle): k-gram extraction and the 128-permutation MinHash signature are
-  per-row array transforms.
+- :func:`char_shingles` / :func:`minhash_sigs_arrow` — map-only (zero
+  shuffle): k-gram extraction is a per-row array transform and the
+  128-permutation MinHash signature one vectorized Arrow pass.
 - :func:`lsh_candidate_pairs` — the only shuffle is a self-join keyed on
   (band_index, band_signature); at 100 TB this is the classic
   shingle→minhash→band→bucket-join layout where bucket sizes, not the
@@ -32,6 +33,7 @@ from arrow_ballista_spark.operators.caching import (
     tracked_local_checkpoint,
     tracked_persist,
 )
+from arrow_ballista_spark.session import shuffle_partitions
 from arrow_ballista_spark.types import local_frame
 
 # MinHash modulus: 2^31 - 1 (Mersenne prime).  Base hashes and permutation
@@ -459,21 +461,6 @@ def base_hashes(grams_col: str) -> Column:
     )
 
 
-def minhash_signature(
-    hashes_col: str, num_perm: int = 128, seed: int = 42
-) -> list[Column]:
-    """MinHash signature columns over a base-hash array column (see
-    :func:`base_hashes`): permutation i is min((a_i*h + b_i) mod p) —
-    all array transforms, zero shuffle."""
-    return [
-        F.expr(
-            f"array_min(transform({hashes_col},"
-            f" h -> pmod({a}L * h + {b}L, {MERSENNE31}L)))"
-        ).alias(f"mh_{i}")
-        for i, (a, b) in enumerate(_perm_coeffs(num_perm, seed))
-    ]
-
-
 def minhash_sigs_arrow(
     hashes: DataFrame,
     id_col: str,
@@ -481,24 +468,25 @@ def minhash_sigs_arrow(
     num_perm: int = 128,
     seed: int = 42,
 ) -> DataFrame:
-    """MinHash signatures as ONE vectorized Arrow pass — the BIT-EXACT
-    kernel form of :func:`minhash_signature` (r12, the _pq_assign_arrow
-    pattern): returns ``(id_col, mh array<long> length num_perm)`` with
-    ``mh[i] = min((a_i*h + b_i) mod p)`` over the base-hash array.
+    """MinHash signatures as ONE vectorized Arrow pass (the one
+    signature layout): returns ``(id_col, mh array<long> length
+    num_perm)`` with ``mh[i] = min((a_i*h + b_i) mod p)`` over the
+    base-hash array — permutation ``i`` of the classic MinHash.
 
-    Why: the column form evaluates num_perm interpreted
-    ``array_min(transform(...))`` folds per row (~100M interpreted ops
-    at sf0.1 across the LSH family — the dominant map cost of every
-    minhash pipeline); here each batch runs num_perm vectorized
-    multiply-mod passes plus a segmented ``np.minimum.reduceat``.
-    Measured 1.42 s -> 0.58 s for the signature stage at sf0.1.
+    Why a kernel: the SQL form ``array_min(transform(hashes, h ->
+    pmod(a*h + b, p)))`` per permutation evaluates num_perm interpreted
+    folds per row (~100M interpreted ops at sf0.1 across the LSH family
+    — the dominant map cost of every minhash pipeline); here each batch
+    runs num_perm vectorized multiply-mod passes plus a segmented
+    ``np.minimum.reduceat``.  Measured 1.42 s -> 0.58 s for the
+    signature stage at sf0.1; the SQL form is kept in ``tests/`` as the
+    bit-exact reference.
 
     Bit-exactness is INTEGER arithmetic: a, b, h < 2^31 so a*h + b
     < 2^63 (no int64 overflow), ``%`` on non-negative int64 ==
     ``pmod``, and min over int64 is order-free.  Docs with NULL or
-    empty gram arrays yield a NULL ``mh`` — exactly the NULL the
-    column form's ``array_min`` over an empty transform produces, so
-    the banding xxhash64 sees the same NULL inputs."""
+    empty gram arrays yield a NULL ``mh`` — the NULL the SQL form's
+    ``array_min`` over an empty transform produces."""
     from pyspark.sql import types as T
 
     coeffs = _perm_coeffs(num_perm, seed)
@@ -561,14 +549,22 @@ def minhash_sigs_arrow(
     )
 
 
-def _band_keys(value_sql, num_perm: int, rows_per_band: int) -> Column:
-    """THE banding key array: per band, one 64-bit xxhash over that
-    band's rows-per-band signature values plus the band index as an INT
-    salt — ``array(xxhash64(v0, v1, .., 0), xxhash64(v4, .., 1), ..)``.
-    ``value_sql(i)`` is the SQL for signature value ``i``; both layouts
-    (``mh_*`` columns, ``mh`` array) derive from this single generator
-    so a stored LSH index and a fresh batch can never band differently
-    (``tests/test_driver_tables.py`` pins the keys bit for bit).
+def band_hash_array_from_sig(
+    sig_col: str, num_perm: int, rows_per_band: int
+) -> Column:
+    """THE banding key array over the array signature column ``sig_col``
+    (:func:`minhash_sigs_arrow`'s ``mh``): per band, one 64-bit xxhash
+    over that band's rows-per-band signature values plus the band index
+    as an INT salt — ``array(xxhash64(v0, .., v3, 0), xxhash64(v4, ..,
+    1), ..)``.  A stored LSH index and a fresh batch only collide if
+    both were banded by this exact expression (seed, band salt, value
+    order), so every consumer (:func:`lsh_candidate_pairs`,
+    :func:`incremental_dedup`) must call this rather than re-derive it;
+    ``tests/test_driver_tables.py`` pins the keys bit for bit.  A scalar
+    hash per band beats an array-typed key: cheaper to shuffle and
+    hash-join; hash collisions only add candidates, which the
+    exact-Jaccard verify removes.  A NULL signature (a doc without
+    grams) bands to fixed all-NULL-input keys.
 
     The array is ONE SQL string parsed once (``F.expr``): the equivalent
     Column tree of per-value/hash/literal calls made ~1,950 of the ~2,500
@@ -579,7 +575,7 @@ def _band_keys(value_sql, num_perm: int, rows_per_band: int) -> Column:
         + ", ".join(
             "xxhash64("
             + ", ".join(
-                value_sql(band * rows_per_band + r)
+                f"`{sig_col}`[{band * rows_per_band + r}]"
                 for r in range(rows_per_band)
             )
             + f", {band})"
@@ -589,54 +585,21 @@ def _band_keys(value_sql, num_perm: int, rows_per_band: int) -> Column:
     )
 
 
-def band_hash_array(num_perm: int, rows_per_band: int) -> Column:
-    """One 64-bit xxhash per LSH band over the ``mh_*`` signature columns
-    — the SINGLE definition of the banding key (via :func:`_band_keys`).
-    A stored LSH index and a fresh batch only collide if both were
-    banded by this exact expression (seed, band salt, column order), so
-    every consumer (:func:`lsh_candidate_pairs`,
-    :func:`incremental_dedup`) must call this or
-    :func:`band_hash_array_from_sig` rather than re-derive it.  A
-    scalar hash per band beats an array-typed key: cheaper to shuffle
-    and hash-join; hash collisions only add candidates, which the
-    exact-Jaccard verify removes."""
-    return _band_keys(lambda i: f"`mh_{i}`", num_perm, rows_per_band)
-
-
-def band_hash_array_from_sig(
-    sig_col: str, num_perm: int, rows_per_band: int
-) -> Column:
-    """:func:`band_hash_array` over the ARRAY signature layout
-    (:func:`minhash_sigs_arrow`'s output): the same :func:`_band_keys`
-    expression over the same values — array elements ``sig[i]`` instead
-    of columns — so both layouts produce identical band keys (NULL
-    signatures hash identically too: a NULL array's elements read as
-    the same NULLs the column form carries)."""
-    return _band_keys(
-        lambda i: f"`{sig_col}`[{i}]", num_perm, rows_per_band
-    )
-
-
 def lsh_candidate_pairs(
     sigs: DataFrame,
     id_col: str,
     num_perm: int = 128,
     rows_per_band: int = 2,
-    sig_col: str | None = None,
+    sig_col: str = "mh",
 ) -> DataFrame:
     """Self-join on LSH bands → distinct candidate pairs (id_a < id_b).
 
     With r rows/band and b bands, a pair of Jaccard s collides with
     probability 1-(1-s^r)^b; r=2, b=64 gives ~1-4e-13 recall at s=0.6.
-    ``sig_col`` names an ARRAY signature column
-    (:func:`minhash_sigs_arrow`); default is the ``mh_*`` column layout
-    — both band through the same :func:`_band_keys` expression.
+    ``sig_col`` names the array signature column
+    (:func:`minhash_sigs_arrow`).
     """
-    bands = (
-        band_hash_array_from_sig(sig_col, num_perm, rows_per_band)
-        if sig_col
-        else band_hash_array(num_perm, rows_per_band)
-    )
+    bands = band_hash_array_from_sig(sig_col, num_perm, rows_per_band)
     # r13 NO-GO note (measured, then reverted): a single-exchange
     # bucket form (groupBy(band_sig) + collect_list + double explode)
     # is value-identical and saved one exchange of the exploded band
@@ -760,8 +723,13 @@ def minhash_dedup_pairs(
     """Full pipeline: shingle → minhash → LSH bands → exact-Jaccard verify.
 
     Returns (id_a, id_b, jaccard) for pairs with Jaccard >= threshold.
-    Output equals brute-force exact Jaccard up to LSH recall (~1 at the
-    default parameters; see lsh_candidate_pairs).
+    Precision is exact (every candidate is verified), but the output is
+    a SUBSET of brute-force exact Jaccard: a pair of Jaccard s becomes a
+    candidate with probability 1-(1-s^r)^b, which at the defaults (r=4,
+    b=32) is 0.873 at s=0.5, 0.988 at s=0.6 and 0.9998 at s=0.7 — so
+    near the default 0.5 threshold about one true pair in eight is
+    missed.  Raise ``num_perm`` / lower ``rows_per_band`` to move the
+    S-curve when pairs near the threshold matter.
 
     Defaults are the production document-dedup shape: word 3-gram shingles
     (char grams saturate on narrow vocabularies and collapse LSH pruning)
@@ -774,10 +742,7 @@ def minhash_dedup_pairs(
     # cluster: a small source file arrives as 1-2 partitions and would
     # otherwise pin 128 permutations x all docs on one core.  One cheap
     # shuffle of the raw rows buys full parallelism.
-    try:
-        parts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    except (TypeError, ValueError):  # e.g. "auto" on managed platforms
-        parts = df.sparkSession.sparkContext.defaultParallelism
+    parts = shuffle_partitions(df.sparkSession)
     # tracked persist: consumed by the signature stage and twice by the
     # verify join
     grams = tracked_persist(
@@ -790,9 +755,7 @@ def minhash_dedup_pairs(
         "hashes",
         num_perm,
     )
-    candidates = lsh_candidate_pairs(
-        sigs, id_col, num_perm, rows_per_band, sig_col="mh"
-    )
+    candidates = lsh_candidate_pairs(sigs, id_col, num_perm, rows_per_band)
     return jaccard_verify(candidates, grams, id_col, threshold)
 
 
@@ -1171,28 +1134,25 @@ def incremental_dedup(
     O(corpus^2).  Batch-internal dedup is the usual banded self-join over
     only the batch.
     """
-    parts_conf = new_docs.sparkSession.conf.get(
-        "spark.sql.shuffle.partitions", "32"
-    )
-    try:
-        parts = int(parts_conf)
-    except (TypeError, ValueError):
-        parts = new_docs.sparkSession.sparkContext.defaultParallelism
+    parts = shuffle_partitions(new_docs.sparkSession)
 
     def prep(df: DataFrame) -> tuple[DataFrame, DataFrame]:
         grams = tracked_persist(
             df.repartition(parts, id_col)
             .select(F.col(id_col), word_shingles(text_col, n).alias("grams"))
         )
-        sigs = grams.select(
-            F.col(id_col), base_hashes("grams").alias("hashes")
-        ).select(F.col(id_col), *minhash_signature("hashes", num_perm))
+        sigs = minhash_sigs_arrow(
+            grams.select(F.col(id_col), base_hashes("grams").alias("hashes")),
+            id_col,
+            "hashes",
+            num_perm,
+        )
         return grams, sigs
 
     new_grams, new_sigs = prep(new_docs)
     idx_grams, idx_sigs = prep(index_docs)
 
-    bands = band_hash_array(num_perm, rows_per_band)
+    bands = band_hash_array_from_sig("mh", num_perm, rows_per_band)
     new_x = tracked_persist(
         new_sigs.select(F.col(id_col), F.explode(bands).alias("band_sig"))
     )
@@ -1201,6 +1161,9 @@ def incremental_dedup(
     # new x index: broadcast the (small) batch side against the corpus.
     # The id inequality handles a RE-CRAWLED doc keeping its id in both
     # inputs: it must not self-match (its signatures trivially collide).
+    # Each candidate distinct() below shuffles its (id_a, id_b) pairs:
+    # Spark cannot know the signature kernel keeps the id partitioning
+    # of `grams`, so the distinct's clustering is not already satisfied.
     cand_idx = (
         idx_x.join(F.broadcast(new_x.withColumnRenamed(id_col, "_nid")),
                    "band_sig")
@@ -1395,10 +1358,7 @@ def winnowing_dedup_pairs(
     # cluster before it runs — a small source file arrives as 1-2 scan
     # partitions and would otherwise pin every md5 on one core (the
     # minhash_dedup_pairs precedent; values unchanged)
-    try:
-        parts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    except (TypeError, ValueError):  # e.g. "auto" on managed platforms
-        parts = df.sparkSession.sparkContext.defaultParallelism
+    parts = shuffle_partitions(df.sparkSession)
     # persist BEFORE the df-cap count so the md5-per-gram fingerprinting
     # pass runs once, not once for `hot` and again for the capped stream
     fps = tracked_persist(
@@ -1515,10 +1475,7 @@ def ppjoin_pairs(
     # spread the (CPU-heavy, map-only) tokenize stage: a single source
     # file arrives as 1-2 partitions and would pin the whole corpus's
     # array building on one core (the minhash_dedup_pairs precedent)
-    try:
-        parts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    except (TypeError, ValueError):  # e.g. "auto" on managed platforms
-        parts = df.sparkSession.sparkContext.defaultParallelism
+    parts = shuffle_partitions(df.sparkSession)
     # materialize the word array ONCE behind a persist: inlining the
     # split+filter into every element_at of the bigram transform is
     # O(words^2) re-tokenization per document

@@ -8,7 +8,9 @@ Spark-first design:
 - centroids are a tiny driver-side list (n_cells × dim floats) chosen
   deterministically from the corpus (min-xxhash sample — a seeded k-means
   refinement can swap in without changing the dataflow);
-- cell assignment is a map-only broadcast argmax (no shuffle);
+- cell assignment and query probing are map-only ``mapInArrow`` passes
+  over one cosine-to-centroids kernel (:func:`_cosine_sims`), the
+  centroids riding in its closure — no shuffle, no literal SQL;
 - at scale the indexed corpus is written ``partitionBy("cell")`` so a
   query's probes prune to ~nprobe/n_cells of the data at the file level
   (partition pruning, no compute on unprobed cells);
@@ -18,31 +20,62 @@ Spark-first design:
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from arrow_ballista_spark.operators.caching import tracked_persist
 from arrow_ballista_spark.operators.similarity import (
-    _dlit,
-    _sql_array,
+    _vector_reader,
     cosine_with_norms,
     norm,
 )
 
 
-def _sql_dot(vec_col: str, lit_array: str) -> str:
-    """SQL twin of similarity.dot (same zip_with/aggregate fold, same
-    casts) — built as ONE expression string.  Constructing the same tree
-    from nested F.lit/F.array/F.aggregate Column objects costs thousands
-    of Py4J round-trips (n_cells x dim literals ~= seconds of driver time
-    per query build); one expr() string is a single JVM parse."""
-    return (
-        f"aggregate(zip_with({vec_col}, {lit_array}, "
-        f"(x, y) -> cast(x as double) * cast(y as double)), "
-        f"cast(0.0 as double), (acc, v) -> acc + v)"
-    )
+def _cosine_sims(cents: "list[list[float]]"):
+    """The one cosine-to-centroids kernel (cell assignment, probing and
+    ``pq._pq_assign_arrow``): returns ``sims(V)``, the ``(n, n_cells)``
+    cosines of each row of ``V`` to each centroid as an ordering key.
+    Dot and row norm accumulate per coordinate in order and the centroid
+    norms are ``math.sqrt`` over the Python left-to-right sum, so every
+    cosine is bit-identical to the SQL fold ``dot / nullif(rn * cn, 0)``
+    the DuckDB oracles compute.  A lane whose ``rn * cn`` is 0 (a zero-norm
+    row) is the fold's NULL and reads ``-inf``; a NaN lane reads
+    ``+inf`` — Spark orders NULL below and NaN above every number.  A
+    nested function, so cloudpickle ships it by value (workers never
+    import this package)."""
+    import math
+
+    import numpy as np
+
+    cents_py = [[float(x) for x in c] for c in cents]
+    if not cents_py:
+        raise ValueError("IVF: no centroids (empty or all-zero corpus)")
+    cnorms = [math.sqrt(sum(x * x for x in c)) for c in cents_py]
+    if not all(x > 0 for x in cnorms):
+        raise ValueError(
+            "IVF: zero-norm centroid — the cosine cell assignment is "
+            "undefined for it; filter it out"
+        )
+    C = np.asarray(cents_py, dtype=np.float64)
+    cn = np.asarray(cnorms, dtype=np.float64)
+
+    def sims(V):
+        import numpy as np
+
+        dots = np.zeros((len(V), len(C)), dtype=np.float64)
+        sq = np.zeros(len(V), dtype=np.float64)
+        for i in range(C.shape[1]):  # coordinate order == the SQL fold
+            dots += V[:, i : i + 1] * C[:, i][None, :]
+            sq += V[:, i] * V[:, i]
+        den = np.sqrt(sq)[:, None] * cn[None, :]
+        with np.errstate(divide="ignore", invalid="ignore"):
+            s = dots / den
+        s = np.where(np.isnan(s), np.inf, s)
+        s[den == 0] = -np.inf
+        return s
+
+    return sims
 
 
 def choose_centroids(
@@ -66,47 +99,70 @@ def choose_centroids(
     return [[float(x) for x in r[1]] for r in rows]
 
 
+def _append_cells(df: DataFrame, vec: str, centroids, op: str, pick):
+    """One Arrow pass over ``df`` appending ``cell int``: ``pick(s)``
+    turns a batch's ``(n, n_cells)`` :func:`_cosine_sims` keys into
+    ``(rows, cells)`` — the input row each output row repeats and its
+    cell as an Arrow int32 array.  Input contract:
+    ``similarity._vector_reader`` (NULL or ragged vectors raise a
+    ``ValueError`` naming ``op``)."""
+    sims = _cosine_sims(centroids)
+    read = _vector_reader(op, len(centroids[0]))
+    pos = df.columns.index(vec)
+
+    def append(batches):
+        import pyarrow as pa
+
+        for batch in batches:
+            rows, cells = pick(sims(read(batch.column(pos))))
+            yield pa.RecordBatch.from_arrays(
+                batch.take(pa.array(rows)).columns + [cells],
+                batch.schema.names + ["cell"],
+            )
+
+    cell = T.StructField("cell", T.IntegerType())
+    return df.mapInArrow(append, T.StructType(df.schema.fields + [cell]))
+
+
 def assign_cells(
     corpus: DataFrame, vec: str, centroids: list[list[float]]
 ) -> DataFrame:
-    """Map-only nearest-centroid assignment (broadcast argmax over the
-    centroid literals)."""
-    # centroid norms are Python constants; the row norm folds once —
-    # one interpreted dot fold per centroid instead of three
-    sims_sql = "array(" + ", ".join(
-        f"({_sql_dot(vec, _sql_array(c))} / "
-        f"nullif(__rn * {_dlit(math.sqrt(sum(x * x for x in c)))}, "
-        f"cast(0.0 as double)))"
-        for c in centroids
-    ) + ")"
-    best = F.expr(
-        f"array_position(cells_sims, array_max(cells_sims)) - 1"
-    )
-    return (
-        corpus.withColumn("__rn", norm(F.col(vec)))
-        .withColumn("cells_sims", F.expr(sims_sql))
-        .withColumn("cell", best.cast("int"))
-        .drop("cells_sims", "__rn")
-    )
+    """Map-only nearest-centroid assignment: appends ``cell int`` — the
+    first maximum cosine (the oracle's ``sim DESC, cell ASC``), NULL for
+    a zero-norm row, which has no cosine."""
+
+    def first_max(s):
+        import numpy as np
+        import pyarrow as pa
+
+        cell = s.argmax(axis=1).astype(np.int32)
+        return np.arange(len(s)), pa.array(
+            cell, mask=(s == -np.inf).all(axis=1)
+        )
+
+    return _append_cells(corpus, vec, centroids, "assign_cells", first_max)
 
 
 def probe_cells(
     queries: DataFrame, vec: str, centroids: list[list[float]], nprobe: int
 ) -> DataFrame:
-    """Attach the nprobe nearest cell ids to each query row (exploded)."""
-    sims_sql = "array(" + ", ".join(
-        f"named_struct('s', ({_sql_dot(vec, _sql_array(c))} / "
-        f"nullif(__rn * {_dlit(math.sqrt(sum(x * x for x in c)))}, "
-        f"cast(0.0 as double))), 'cell', {i})"
-        for i, c in enumerate(centroids)
-    ) + ")"
-    top = F.expr(f"slice(reverse(array_sort({sims_sql})), 1, {nprobe})")
-    return (
-        queries.withColumn("__rn", norm(F.col(vec)))
-        .withColumn("cell", F.explode(F.transform(top, lambda x: x["cell"])))
-        .withColumn("cell", F.col("cell").cast("int"))
-        .drop("__rn")
-    )
+    """Attach the nprobe nearest cell ids to each query row (exploded),
+    ranked by the oracle's ``sim DESC, cell DESC`` — so a zero-norm
+    query, whose cosines are all NULL, probes the nprobe highest cell
+    ids."""
+
+    def nearest(s):
+        import numpy as np
+        import pyarrow as pa
+
+        cells = np.broadcast_to(np.arange(s.shape[1]), s.shape)
+        top = np.lexsort((-cells, -s))[:, :nprobe]
+        return (
+            np.repeat(np.arange(len(s)), top.shape[1]),
+            pa.array(top.reshape(-1).astype(np.int32)),
+        )
+
+    return _append_cells(queries, vec, centroids, "probe_cells", nearest)
 
 
 def ivf_topk(

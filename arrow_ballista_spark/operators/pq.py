@@ -17,16 +17,17 @@ generated DuckDB oracle:
   k rows, driver work O(k*d), corpus-size-independent.  (Production PQ
   trains per-subspace k-means; the assignment dataflow below is
   identical — swap the codebook source.)
-- **Assignment is map-only** (r12): the m*k codebook rides as one
-  constant-folded nested-array literal; each vector computes, per
-  subspace, k squared-L2 distances with the deterministic left-to-right
-  fold and keeps the argmin via ``array_min`` over ``struct(dist,
-  code)`` — ties break to the smallest code, matching the SQL oracle's
-  ``row_number() ORDER BY dist, code``.  No explode, no codebook join,
-  no (id, s) re-aggregation.
+- **One distance kernel** (:func:`_sub_dists`): per subspace, k
+  squared-L2 distances with the deterministic left-to-right fold, in
+  numpy, the m*k codebook riding in the kernel's closure.  The corpus
+  encode (:func:`_pq_assign_arrow`, one map-only ``mapInArrow`` pass)
+  keeps the argmin — ties break to the smallest code, matching the SQL
+  oracle's ``row_number() ORDER BY dist, code``; the query side
+  (:func:`_pq_query_tables`) keeps the whole table for ADC.  No
+  explode, no codebook join, no (id, s) re-aggregation, no literal.
 - **Codes and recon_err are projections**: the codes array and the
   reconstruction error (per-subspace minima folded in subspace order)
-  come straight off the per-row struct array — zero shuffles in the
+  come straight off the kernel's per-row arrays — zero shuffles in the
   encode (rounded by callers — the 6dp registry contract absorbs
   summation-order noise).
 """
@@ -35,6 +36,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from arrow_ballista_spark.operators import ivf
+from arrow_ballista_spark.operators.similarity import _vector_reader, norm
 
 
 def pq_codebooks(
@@ -61,59 +66,6 @@ def pq_codebooks(
     ]
 
 
-def _sq_fold(vec, cw, s, sub: int):
-    """Squared-L2 between subvector ``s`` of ``vec`` and codeword ``cw``
-    via the canonical left-to-right fold — the SAME addend order as the
-    pre-r12 slice+aggregate form and the DuckDB oracles' list_reduce, so
-    the map-only kernels below are bit-identical to the joined shape
-    they replaced."""
-    return F.aggregate(
-        F.sequence(F.lit(1), F.lit(sub)),
-        F.lit(0.0).cast("double"),
-        lambda acc, i: acc
-        + (vec[s * F.lit(sub) + i - 1] - cw[i - 1])
-        * (vec[s * F.lit(sub) + i - 1] - cw[i - 1]),
-    )
-
-
-def _books_literal(books) -> F.Column:
-    """The m*k*sub codebook as ONE parsed SQL array literal.  r13:
-    ``F.lit(books)`` converted every nested element through py4j
-    individually — ~2 s of pure driver plan-build for the trained
-    16x32x4 codebook, the dominant cost of ext_sim_topk_pq_trained
-    (measured: adc_build 2.0 s -> ~0.05 s with the parsed form).  The
-    repr round-trip CAST is the repo's exact-float64 literal contract
-    (``similarity._dlit``), so the column holds bit-identical doubles."""
-    from arrow_ballista_spark.operators.similarity import _sql_array
-
-    return F.expr(
-        "array("
-        + ", ".join(
-            "array(" + ", ".join(_sql_array(cw) for cw in sb) + ")"
-            for sb in books
-        )
-        + ")"
-    )
-
-
-def _pq_dist_tables(vec, books):
-    """Per-query ADC table as a nested-array column: ``tbl[s][code]`` =
-    exact subspace distance from ``vec``'s subvector ``s`` to codeword
-    ``code`` — same fold as :func:`_sq_fold`, shaped for the map-only
-    ``tbl[s][codes[s]]`` lookup in the search paths (replaces the
-    (s, code)-keyed join + per-(query, corpus) SUM: the m addends now
-    fold in subspace order inside one row; the ranking key rounds to
-    6dp before comparison, so summation-order noise ~1e-15 cannot move
-    it — the pq_adc_topk engine-stability contract)."""
-    sub = len(books[0][0])
-    return F.transform(
-        _books_literal(books),
-        lambda sb, s: F.transform(
-            sb, lambda cw, c: _sq_fold(vec, cw, s, sub)
-        ),
-    )
-
-
 def _adc_sum(m: int):
     """The map-only ADC distance: sum of the per-subspace table lookups,
     folded in subspace order over the ``_qt``/``_codes`` columns."""
@@ -121,6 +73,33 @@ def _adc_sum(m: int):
         f"aggregate(sequence(0, {m - 1}), cast(0.0 as double),"
         " (acc, s) -> acc + _qt[s][_codes[s]])"
     )
+
+
+def _sub_dists(books: "list[list[list[float]]]"):
+    """The one per-subspace squared-L2 kernel: returns ``dists(X)``, the
+    ``(n, m, k)`` distances from each row's subvector ``s`` to codeword
+    ``c`` of subspace ``s``, accumulated ``acc += (x_i - cw_i)^2`` in
+    ``i`` order — elementwise float64, identical to the SQL
+    ``aggregate`` left-to-right fold and the DuckDB ``list_reduce``.
+    The corpus encode keeps its argmin (:func:`_pq_assign_arrow`); the
+    query side keeps the whole table (:func:`_pq_query_tables`).  A
+    nested function, so cloudpickle ships it by value."""
+    import numpy as np
+
+    B = np.asarray(books, dtype=np.float64)  # (m, k, sub)
+    m, k, sub = B.shape
+
+    def dists(X):
+        import numpy as np
+
+        S = X.reshape(len(X), m, sub)
+        D = np.zeros((len(X), m, k), dtype=np.float64)
+        for i in range(sub):  # i order == the SQL fold
+            diff = S[:, :, i, None] - B[None, :, :, i]
+            D += diff * diff
+        return D
+
+    return dists
 
 
 def _pq_assign_arrow(
@@ -149,118 +128,53 @@ def _pq_assign_arrow(
     Bit-exactness contract (the oracle equality argument, preserved
     term by term):
 
-    - subspace distance: ``acc += (sv_i - cw_i)^2`` accumulated in
-      ``i`` order — elementwise float64, identical to the SQL
-      ``aggregate`` left-to-right fold and the DuckDB ``list_reduce``;
+    - subspace distance: :func:`_sub_dists`;
     - argmin ties: ``np.argmin`` keeps the FIRST minimum = smallest
       code, the ``min_by(code, struct(dist, code))`` /
       ``row_number() ORDER BY dist, code`` contract;
-    - cell cosine: dot and row-norm accumulated in coordinate order
-      (the ``_sql_dot`` fold), centroid norms from the same Python
-      floats that ``ivf.assign_cells`` embeds as literals, ``argmax``
-      first-max ties = ``array_position(sims, array_max(sims))``;
+    - cell cosine: ``ivf._cosine_sims``, ``argmax`` first-max ties =
+      the oracle's ``sim DESC, cell ASC``;
     - residual: elementwise ``v - centroid[cell]`` = ``zip_with``.
 
-    Only (id, vector) cross the Python boundary (column-pruned select —
-    guide §4.1); numpy state is built once per task before the batch
-    loop (§4.5).  Callers must pre-filter zero-norm rows when ``cents``
-    is given (the serving-index population), as the JVM path always did.
+    Only (id, vector) cross the Python boundary (a column-pruned
+    select); numpy state is built once on the driver and shipped in the
+    closure.  Callers must pre-filter zero-norm rows when ``cents`` is
+    given (the serving-index population).
 
     Input contract: ``similarity._vector_reader`` (NULL or ragged
     vectors raise a ``ValueError`` naming the row).  Zero-norm
-    CENTROIDS are rejected at setup below.
+    CENTROIDS are rejected at setup (``ivf._cosine_sims``).
     """
-    import math
-
-    from pyspark.sql import types as T
-
-    from arrow_ballista_spark.operators.similarity import _vector_reader
+    import numpy as np
 
     m = len(books)
-    sub = len(books[0][0])
-    d = m * sub
-    books_py = [[[float(x) for x in cw] for cw in sb] for sb in books]
-    cents_py = (
-        [[float(x) for x in c] for c in cents] if cents is not None else None
-    )
-    # centroid norms as the SAME Python floats assign_cells bakes into
-    # its SQL literals (math.sqrt over the Python left-to-right sum)
-    cnorms_py = (
-        [math.sqrt(sum(x * x for x in c)) for c in cents_py]
-        if cents_py is not None
-        else None
-    )
-    if cnorms_py is not None and not all(x > 0 for x in cnorms_py):
-        # fail fast (ADVICE r12): a zero-norm centroid would make the
-        # kernel's sims NaN and argmax could pick the NaN lane, silently
-        # diverging from the JVM nullif path that ignores that centroid.
-        # choose_centroids never emits one; only caller-supplied cents
-        # (ivf_pq_residual_topk) could.
-        raise ValueError(
-            "_pq_assign_arrow: zero-norm centroid in cents — the cosine "
-            "cell assignment is undefined for it; filter it out (the "
-            "JVM nullif path ignores such centroids)"
-        )
-
-    read = _vector_reader("_pq_assign_arrow", d)
+    dists = _sub_dists(books)
+    sims = ivf._cosine_sims(cents) if cents is not None else None
+    C = np.asarray(cents, dtype=np.float64) if residual else None
+    read = _vector_reader("_pq_assign_arrow", m * len(books[0][0]))
 
     def assign(batches):
         import numpy as np
         import pyarrow as pa
 
-        B = np.asarray(books_py, dtype=np.float64)
-        C = (
-            np.asarray(cents_py, dtype=np.float64)
-            if cents_py is not None
-            else None
-        )
-        cn = (
-            np.asarray(cnorms_py, dtype=np.float64)
-            if cnorms_py is not None
-            else None
-        )
         for batch in batches:
-            ids = batch.column(0)
-            va = batch.column(1)
-            n = len(va)
-            V = read(va)
-            cols, names = [ids], [id_col]
-            X = V
-            if C is not None:
-                nc = C.shape[0]
-                accd = np.zeros((n, nc), dtype=np.float64)
-                accn = np.zeros(n, dtype=np.float64)
-                for i in range(d):  # coordinate order == the SQL fold
-                    accd += V[:, i : i + 1] * C[:, i][None, :]
-                    accn += V[:, i] * V[:, i]
-                sims = accd / (np.sqrt(accn)[:, None] * cn[None, :])
-                cell = sims.argmax(axis=1)  # first max == smallest cell
-                if residual:
-                    X = V - C[cell]
+            X = read(batch.column(1))
+            n = len(X)
+            cols, names = [batch.column(0)], [id_col]
+            if sims is not None:
+                cell = sims(X).argmax(axis=1)  # first max == smallest cell
+                if C is not None:
+                    X = X - C[cell]
                 cols.append(pa.array(cell.astype(np.int32)))
                 names.append("cell")
-            codes = np.empty((n, m), dtype=np.int32)
-            dists = np.empty((n, m), dtype=np.float64)
-            for s in range(m):
-                SV = X[:, s * sub : (s + 1) * sub]
-                acc = np.zeros((n, B.shape[1]), dtype=np.float64)
-                for i in range(sub):  # i order == the SQL fold
-                    diff = SV[:, i : i + 1] - B[s, :, i][None, :]
-                    acc += diff * diff
-                cs = acc.argmin(axis=1)  # first min == smallest code
-                codes[:, s] = cs
-                dists[:, s] = acc[np.arange(n), cs]
+            D = dists(X)
+            codes = D.argmin(axis=2)  # first min == smallest code
+            best = np.take_along_axis(D, codes[:, :, None], axis=2)
             off = pa.array(np.arange(0, (n + 1) * m, m, dtype=np.int32))
-            cols.append(
-                pa.ListArray.from_arrays(
-                    off, pa.array(codes.reshape(-1), type=pa.int32())
+            for vals in (codes.astype(np.int32), best):
+                cols.append(
+                    pa.ListArray.from_arrays(off, pa.array(vals.reshape(-1)))
                 )
-            )
-            cols.append(
-                pa.ListArray.from_arrays(
-                    off, pa.array(dists.reshape(-1), type=pa.float64())
-                )
-            )
             yield pa.RecordBatch.from_arrays(cols, names + ["_codes", "_dists"])
 
     fields = [T.StructField(id_col, df.schema[id_col].dataType)]
@@ -274,6 +188,56 @@ def _pq_assign_arrow(
         F.col(id_col), F.col(vec_col).cast("array<double>").alias("_v")
     )
     return src.mapInArrow(assign, T.StructType(fields))
+
+
+def _pq_query_tables(
+    queries: DataFrame,
+    vec_col: str,
+    books: "list[list[list[float]]]",
+    cents: "list[list[float]] | None" = None,
+) -> DataFrame:
+    """The query side of every ADC search: one Arrow pass replacing
+    ``vec_col`` by ``_qt array<array<double>>``, ``_qt[s][code]`` = the
+    exact subspace distance from the query's subvector ``s`` to
+    ``code`` (:func:`_sub_dists`, the corpus encode's own fold), shaped
+    for the map-only ``_qt[s][_codes[s]]`` lookup of :func:`_adc_sum`.
+    With ``cents`` (residual IVF-PQ) each row first subtracts the
+    centroid of its probed ``cell`` column (elementwise ``q - c`` =
+    ``zip_with``).  Lazy: the query frame is never collected."""
+    import numpy as np
+
+    m, k = len(books), len(books[0])
+    dists = _sub_dists(books)
+    C = np.asarray(cents, dtype=np.float64) if cents is not None else None
+    read = _vector_reader("_pq_query_tables", m * len(books[0][0]))
+    pos = queries.columns.index(vec_col)
+    cpos = queries.columns.index("cell") if cents is not None else None
+    keep = [i for i, c in enumerate(queries.columns) if c != vec_col]
+
+    def tables(batches):
+        import numpy as np
+        import pyarrow as pa
+
+        for batch in batches:
+            X = read(batch.column(pos))
+            if C is not None:
+                X = X - C[batch.column(cpos).to_numpy(zero_copy_only=False)]
+            n = len(X)
+            inner = pa.ListArray.from_arrays(
+                pa.array(np.arange(0, (n * m + 1) * k, k, dtype=np.int32)),
+                pa.array(dists(X).reshape(-1)),
+            )
+            qt = pa.ListArray.from_arrays(
+                pa.array(np.arange(0, (n + 1) * m, m, dtype=np.int32)), inner
+            )
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(i) for i in keep] + [qt],
+                [batch.schema.names[i] for i in keep] + ["_qt"],
+            )
+
+    fields = [queries.schema.fields[i] for i in keep]
+    qt = T.StructField("_qt", T.ArrayType(T.ArrayType(T.DoubleType())))
+    return queries.mapInArrow(tables, T.StructType(fields + [qt]))
 
 
 def pq_code_rows(
@@ -387,7 +351,7 @@ def pq_adc_topk(
 
     Scale shape (r12): the corpus encodes in one vectorized map-only
     pass (:func:`_pq_assign_arrow`); the nq query ADC tables
-    (:func:`_pq_dist_tables`, bounded) broadcast into a nested-loop
+    (:func:`_pq_query_tables`, bounded) broadcast into a nested-loop
     join and the distance is m array lookups per (query, corpus) row —
     the corpus never shuffles before the per-query top-k window.  The
     pre-r12 shape paid two exchanges here (codes groupBy(id, s) + the
@@ -397,10 +361,12 @@ def pq_adc_topk(
     coded = _pq_assign_arrow(corpus, corpus_id, vec, books).select(
         F.col(corpus_id), F.col("_codes")
     )
-    qt = queries.select(
-        F.col(query_id), F.col(vec).cast("array<double>").alias("_qv")
-    ).select(
-        F.col(query_id), _pq_dist_tables(F.col("_qv"), books).alias("_qt")
+    qt = _pq_query_tables(
+        queries.select(
+            F.col(query_id), F.col(vec).cast("array<double>").alias("_qv")
+        ),
+        "_qv",
+        books,
     )
     scored = (
         coded.crossJoin(F.broadcast(qt))
@@ -449,9 +415,6 @@ def ivf_pq_topk(
     are all gone.  At rest the corpus is written partitioned by cell so
     a probe prunes at the file level (the ext_sim_topk_ivf layout
     note)."""
-    from arrow_ballista_spark.operators import ivf
-    from arrow_ballista_spark.operators.similarity import norm
-
     cents = ivf.choose_centroids(corpus, corpus_id, vec, n_cells)
     if books is None:  # quality path: train_codebooks(...)
         books = pq_codebooks(corpus, corpus_id, vec, m, n_codes)
@@ -459,17 +422,17 @@ def ivf_pq_topk(
         F.col(corpus_id), F.col(vec).cast("array<double>").alias("_v")
     ).filter(norm(F.col("_v")) > 0)
     coded = _pq_assign_arrow(nz, corpus_id, "_v", books, cents=cents)
-    qt = ivf.probe_cells(
-        queries.select(
-            F.col(query_id), F.col(vec).cast("array<double>").alias("_qv")
+    qt = _pq_query_tables(
+        ivf.probe_cells(
+            queries.select(
+                F.col(query_id), F.col(vec).cast("array<double>").alias("_qv")
+            ),
+            "_qv",
+            cents,
+            nprobe,
         ),
         "_qv",
-        cents,
-        nprobe,
-    ).select(
-        F.col(query_id),
-        F.col("cell"),
-        _pq_dist_tables(F.col("_qv"), books).alias("_qt"),
+        books,
     )
     scored = (
         coded.join(F.broadcast(qt), "cell")
@@ -673,8 +636,6 @@ def _sample_matrix(
     :func:`train_codebooks_literals` pins that exact sample.)"""
     import numpy as np
 
-    from arrow_ballista_spark.operators.similarity import norm
-
     df = corpus.select(F.col(id_col).alias("_id"), F.col(vec).alias("_v"))
     if nonzero:
         df = df.filter(norm(F.col("_v")) > 0)
@@ -765,9 +726,6 @@ def ivf_pq_residual_topk(
     PQ+rerank ceiling): raise nprobe toward ``n_cells``, or drop IVF
     and use :func:`pq_rerank_topk` whose adaptive-R default already
     meets 0.95 there."""
-    from arrow_ballista_spark.operators import ivf
-    from arrow_ballista_spark.operators.similarity import norm
-
     if books is not None and cents is None:
         # residual codebooks are only meaningful in the basis of the
         # centroids they were trained against — silently training fresh
@@ -796,15 +754,7 @@ def ivf_pq_residual_topk(
     coded = _pq_assign_arrow(
         nz, corpus_id, "_v", books, cents=cents, residual=True
     )
-    # r13: one parsed SQL literal instead of F.lit(nested list) — the
-    # latter crosses py4j once per element (~1 s of plan build for
-    # 16x64 doubles; the _books_literal finding)
-    from arrow_ballista_spark.operators.similarity import _sql_array
-
-    centlit = F.expr(
-        "array(" + ", ".join(_sql_array(c) for c in cents) + ")"
-    )
-    qt = (
+    qt = _pq_query_tables(
         ivf.probe_cells(
             queries.select(
                 F.col(query_id), F.col(vec).cast("array<double>").alias("_qv")
@@ -812,18 +762,10 @@ def ivf_pq_residual_topk(
             "_qv",
             cents,
             nprobe,
-        )
-        .withColumn(
-            "_qrv",
-            F.zip_with(
-                F.col("_qv"), centlit[F.col("cell")], lambda a, b: a - b
-            ),
-        )
-        .select(
-            F.col(query_id),
-            F.col("cell"),
-            _pq_dist_tables(F.col("_qrv"), books).alias("_qt"),
-        )
+        ),
+        "_qv",
+        books,
+        cents=cents,
     )
     scored = (
         coded.join(F.broadcast(qt), "cell")

@@ -2,19 +2,23 @@
 
 Two paths, mirroring a production ANN layout:
 
-- :func:`brute_force_topk` — exact cosine top-k.  The query side is
-  broadcast (it is small by construction); the corpus side streams, so the
-  cost is one scan of the corpus per batch of queries — the correct
-  baseline at any scale when the query batch fits in memory.
+- :func:`brute_force_topk` — exact cosine top-k.  The query batch (small
+  by contract) collects to the driver once; one Arrow kernel scores every
+  corpus batch against it, so the cost is one scan of the corpus per
+  batch of queries — the correct baseline at any scale when the query
+  batch fits in memory.
 - :func:`hyperplane_lsh_topk` — multi-table random-hyperplane LSH
   (L tables of k sign bits + Hamming-1 multiprobe) with exact-cosine
   re-rank; :func:`lsh_cosine_near_dup_pairs` is the all-pairs variant.
   At 100 TB the bucketed corpus is written partitioned by (table, bucket)
   so a query touches ~L/2^k of the corpus.
 
-All dot products are ``zip_with``/``aggregate`` array expressions —
-JVM-side, sequential fold, bit-identical to the DuckDB oracle's
-``list_sum(list_transform(list_zip(...)))`` (verified).
+Every dot product is a sequential double fold in coordinate order,
+bit-identical to the DuckDB oracle's ``list_reduce`` over the products:
+the re-rank cosines are JVM ``zip_with``/``aggregate`` expressions
+(:func:`dot`), and the Arrow kernels (brute force, LSH buckets, and the
+IVF/PQ/k-means kernels built on :func:`_vector_reader`) accumulate
+``acc += a_i * b_i`` per coordinate in numpy — never BLAS.
 """
 
 from __future__ import annotations
@@ -27,28 +31,13 @@ from pyspark.sql import functions as F
 from arrow_ballista_spark.operators.caching import tracked_persist
 
 
-def _dlit(x: float) -> str:
-    """Engine-exact double literal for generated SQL: repr() round-trips
-    the binary value and the string-cast parses it back bit-identically
-    (a bare 1.23 in Spark SQL would parse as DECIMAL).  THE shared
-    exact-float64 literal contract — ivf/pq/kmeans import this one
-    definition (r13: four hand-rolled copies could drift)."""
-    return f"CAST('{float(x)!r}' AS DOUBLE)"
-
-
-def _sql_array(vec: "list[float]") -> str:
-    """One parsed SQL array literal over :func:`_dlit` values — always
-    prefer this to ``F.array(*[F.lit(x) ...])`` / ``F.lit(list)``, which
-    cross py4j once per element (measured: seconds of pure driver plan
-    build at codebook/plane sizes)."""
-    return "array(" + ", ".join(_dlit(x) for x in vec) + ")"
-
-
 def _vector_reader(op: str, dim: int):
     """THE vector-batch contract of the Arrow kernels (k-means, LSH
-    buckets, PQ): returns ``read(va)`` turning an Arrow ``list<double>``
-    batch column into an ``(n, dim)`` float64 matrix.  A NULL vector, a
-    NULL element or a row whose length is not ``dim`` raises a
+    buckets, IVF, PQ, brute force): returns ``read(va)`` turning an
+    Arrow ``list<float|double>`` batch column into an ``(n, dim)``
+    float64 matrix (float32 widens exactly, as the SQL folds' casts
+    do).  A NULL vector, a NULL element or a row whose length is not
+    ``dim`` raises a
     ``ValueError`` naming ``op``, the expected dim and the offending
     batch row — the kernels' ordered folds have no value for such rows,
     and a bare ``reshape`` would fail with a numpy shape message naming
@@ -75,7 +64,11 @@ def _vector_reader(op: str, dim: int):
         flat = va.flatten()
         if flat.null_count:
             raise ValueError(f"{op}: NULL element in a vector of dim {dim}")
-        return flat.to_numpy(zero_copy_only=False).reshape(len(va), dim)
+        return (
+            flat.to_numpy(zero_copy_only=False)
+            .astype(np.float64, copy=False)
+            .reshape(len(va), dim)
+        )
 
     return read
 
@@ -160,59 +153,92 @@ def brute_force_topk(
     vec: str = "embedding",
     k: int = 5,
     exclude_self: bool = True,
-    vectorized: bool = False,
 ) -> DataFrame:
-    """Exact cosine top-k: broadcast queries × streamed corpus.
+    """Exact cosine top-k: the query batch × the streamed corpus.
 
-    Rank key is (rounded cosine DESC, corpus id ASC) so ordering is
+    Rank key is (cosine DESC, corpus id ASC) so ordering is
     deterministic and engine-independent.  ``exclude_self`` drops rows
     where the ids are equal — correct for self-search over one table
     (the usual dedup/recommendation case); pass False when query and
     corpus ids are unrelated namespaces.  ``query_id`` and ``corpus_id``
-    must be distinct names (the join output carries both).
+    must be distinct names (the output carries both).
 
-    ``vectorized=True`` is the scale path for large corpora: the query
-    batch (small by contract) collects to the driver as a numpy matrix
-    and each corpus Arrow batch scores against it with one matmul,
-    emitting only a per-batch top-(k+margin) candidate set before the
-    global window — corpus-linear with a BLAS constant instead of the
-    interpreted fold.  Values may differ from the fold at ~1e-16; if
-    more than the margin (8) of corpus vectors tie EXACTLY at a query's
-    k-th cosine within one batch, the id tie-break can differ —
-    agreement is pinned by test on the fixtures.
+    The query batch (small by contract) collects to the driver once, as
+    Arrow; one ``mapInArrow`` kernel scores each corpus batch against it
+    with the dot and norm folds accumulated per coordinate in order, so
+    every cosine is bit-identical to the SQL fold ``dot / nullif(qn *
+    cn, 0)``.  Zero-norm rows (on either side) have no cosine and, with
+    ``exclude_self``, self-pairs are dropped inside the kernel.  Each
+    batch emits every candidate whose cosine is at least its k-th best
+    for that query — all ties at the k-th cosine included — and the
+    final window ranks the union, so the kept set is exactly the global
+    top-k.  Input contract: :func:`_vector_reader` (NULL or ragged
+    vectors raise), with the dim of the first query vector.
     """
-    q = queries.select(
-        F.col(query_id),
-        F.col(vec).alias("qv"),
-        norm(F.col(vec)).alias("qn"),
-    )
-    c = corpus.select(
-        F.col(corpus_id),
-        F.col(vec).alias("cv"),
-        norm(F.col(vec)).alias("cn"),
-    )
-    if vectorized:
-        scored = _bf_scored_vectorized(q, c, query_id, corpus_id, k)
-        if exclude_self:
-            scored = scored.filter(F.col(query_id) != F.col(corpus_id))
-    else:
-        scored = F.broadcast(q).crossJoin(c)
-        if exclude_self:
-            scored = scored.filter(F.col(query_id) != F.col(corpus_id))
-        scored = (
-            scored
-            .select(
-                query_id,
-                corpus_id,
-                cosine_with_norms(
-                    F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn")
-                ).alias("cos_raw"),
+    from pyspark.sql import types as T
+
+    qt = queries.select(
+        F.col(query_id), F.col(vec).cast("array<double>")
+    ).toArrow()
+    qids = qt.column(0).combine_chunks()
+    qv = qt.column(1).combine_chunks()
+    dims = [n for n in qv.value_lengths().to_pylist() if n is not None]
+    dim = dims[0] if dims else 0
+    read = _vector_reader("brute_force_topk", dim)
+    Q = read(qv)
+
+    def score(batches):
+        import numpy as np
+        import pyarrow as pa
+
+        def dots(A, B):  # coordinate order == the SQL fold
+            D = np.zeros((len(A), len(B)), dtype=np.float64)
+            for i in range(dim):
+                D += A[:, i : i + 1] * B[:, i][None, :]
+            return D
+
+        def norms(A):
+            acc = np.zeros(len(A), dtype=np.float64)
+            for i in range(dim):
+                acc += A[:, i] * A[:, i]
+            return np.sqrt(acc)
+
+        qn = norms(Q)
+        qkeys = qids.to_numpy(zero_copy_only=False)
+        for batch in batches:
+            ids = batch.column(0)
+            V = read(batch.column(1))
+            den = qn[:, None] * norms(V)[None, :]
+            with np.errstate(divide="ignore", invalid="ignore"):
+                cos = dots(Q, V) / den
+            ok = den != 0  # the fold's nullif: no cosine, no candidate
+            if exclude_self:
+                ok &= qkeys[:, None] != ids.to_numpy(zero_copy_only=False)
+            # Spark ranks NaN above every number
+            key = np.where(ok, np.where(np.isnan(cos), np.inf, cos), -np.inf)
+            n = len(V)
+            if 0 < k < n:
+                kth = np.partition(key, n - k, axis=1)[:, n - k]
+                ok &= key >= kth[:, None]
+            qi, ci = np.nonzero(ok)
+            yield pa.RecordBatch.from_arrays(
+                [qids.take(pa.array(qi)), ids.take(pa.array(ci)),
+                 pa.array(cos[qi, ci])],
+                [query_id, corpus_id, "cos_raw"],
             )
-            # zero-norm vectors have no defined cosine: exclude them
-            # (identically to the vectorized path) rather than letting
-            # NULL rows pad out rnk<=k when candidates run short
-            .filter(F.col("cos_raw").isNotNull())
-        )
+
+    scored = corpus.select(
+        F.col(corpus_id), F.col(vec).cast("array<double>")
+    ).mapInArrow(
+        score,
+        T.StructType(
+            [
+                queries.schema[query_id],
+                corpus.schema[corpus_id],
+                T.StructField("cos_raw", T.DoubleType()),
+            ]
+        ),
+    )
     w = Window.partitionBy(query_id).orderBy(
         F.col("cos_raw").desc(), F.col(corpus_id)
     )
@@ -518,47 +544,3 @@ def cosine_near_dup_pairs(
         .filter(F.col("cos_raw") >= threshold)
     )
 
-
-def _bf_scored_vectorized(
-    q: DataFrame, c: DataFrame, query_id: str, corpus_id: str, k: int
-) -> DataFrame:
-    """Matmul candidate scorer for brute_force_topk(vectorized=True):
-    per corpus Arrow batch, one (n_q x batch) cosine matrix, keep the
-    per-batch top-(k+margin) per query (margin survives the downstream
-    self-exclusion filter and exact-tie id breaks)."""
-    import numpy as np
-    import pandas as pd
-
-    rows = q.collect()  # query batch — small by contract (top-k search)
-    qids = np.array([r[query_id] for r in rows], dtype="int64")
-    Q = np.array([list(r["qv"]) for r in rows], dtype=np.float64)
-    Qn = np.array([r["qn"] for r in rows], dtype=np.float64)
-    m_keep = k + 8
-
-    def score(batches):
-        for pdf in batches:
-            cn = pdf["cn"].to_numpy(dtype=np.float64)
-            ok = cn > 0
-            if not ok.any():
-                continue
-            ids = pdf[corpus_id].to_numpy()[ok]
-            V = np.array(pdf["cv"][ok].tolist(), dtype=np.float64)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                S = (Q @ V.T) / np.outer(Qn, cn[ok])
-            m = min(m_keep, S.shape[1])
-            part = np.argpartition(-S, m - 1, axis=1)[:, :m]
-            qi = np.repeat(np.arange(len(qids)), m)
-            ci = part.ravel()
-            cos = S[qi, ci]
-            fin = np.isfinite(cos)
-            yield pd.DataFrame(
-                {
-                    query_id: qids[qi[fin]],
-                    corpus_id: ids[ci[fin]].astype("int64"),
-                    "cos_raw": cos[fin],
-                }
-            )
-
-    return c.mapInPandas(
-        score, f"{query_id} long, {corpus_id} long, cos_raw double"
-    )

@@ -10,7 +10,11 @@ Every oracle here is value-exact, not just approximately equal:
   list_zip(...)))`` — same order, same widening) → bit-identical;
 - hash-dependent ops (xxhash64 minhash/simhash/rolling-hash, Python-seeded
   LSH hyperplanes) are either verified against an *exact* brute-force
-  oracle (LSH recall ≈ 1 at the chosen parameters) or declared rows-only.
+  oracle or declared rows-only.  The MinHash entries' exact oracles match
+  because no fixture pair lies near the threshold, not because LSH recall
+  is 1: with 32 bands of 4 rows a pair of Jaccard s is found with
+  probability 1-(1-s^4)^32 — 0.873 at s = 0.5, 0.988 at 0.6 and 0.9998
+  at 0.7.
 """
 
 from __future__ import annotations
@@ -23,6 +27,7 @@ from pyspark.sql import functions as F
 from arrow_ballista_spark.catalog import load_table
 from arrow_ballista_spark.operators import dedup, layout, multimodal, similarity, text
 from arrow_ballista_spark.queries import R, cround, query
+from arrow_ballista_spark.session import shuffle_partitions
 from arrow_ballista_spark.streaming import pipeline as streaming
 from arrow_ballista_spark.types import local_frame
 
@@ -565,10 +570,7 @@ def _docs_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-file documents scan arrives as 1-2 partitions, which pins the
     codec entries' CPU-heavy mapInPandas stages on two cores (measured:
     jpeg_stats 12.8s -> 1.3s at sf0.1 — the ppjoin tokenize precedent)."""
-    try:
-        parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except (TypeError, ValueError):
-        parts = spark.sparkContext.defaultParallelism
+    parts = shuffle_partitions(spark)
     return (
         load_table(spark, sf_dir, "documents")
         .select("doc_id", "text")
@@ -2831,11 +2833,7 @@ FROM pairs
 )
 def ext_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    parts_conf = spark.conf.get("spark.sql.shuffle.partitions", "32")
-    try:
-        parts = int(parts_conf)
-    except (TypeError, ValueError):
-        parts = spark.sparkContext.defaultParallelism
+    parts = shuffle_partitions(spark)
     from arrow_ballista_spark.operators.caching import tracked_persist
 
     grams = tracked_persist(
@@ -2854,9 +2852,7 @@ def ext_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     # symmetric candidates (id_a < id_b), then verify BOTH directions —
     # containment is asymmetric, so each unordered candidate yields up to
     # two ordered rows
-    cand = dedup.lsh_candidate_pairs(
-        sigs, "doc_id", 128, rows_per_band=4, sig_col="mh"
-    )
+    cand = dedup.lsh_candidate_pairs(sigs, "doc_id", 128, rows_per_band=4)
     both = cand.unionByName(
         cand.select(
             F.col("id_b").alias("id_a"), F.col("id_a").alias("id_b")

@@ -40,6 +40,16 @@ DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 CODEGEN_CACHE_MAX_ENTRIES = 2500
 
 
+def shuffle_partitions(spark: SparkSession) -> int:
+    """The session's ``spark.sql.shuffle.partitions`` as an int — the
+    width of the explicit spreads before CPU-heavy map stages.  Managed
+    platforms set the conf to non-numeric values (``"auto"``); those
+    fall back to the context's ``defaultParallelism``."""
+    try:
+        return int(spark.conf.get("spark.sql.shuffle.partitions"))
+    except (TypeError, ValueError):
+        return spark.sparkContext.defaultParallelism
+
 def get_session(
     app_name: str = "arrow-ballista-spark",
     master: str | None = None,

@@ -15,6 +15,7 @@ import pytest
 
 from arrow_ballista_spark.queries import load_all
 from arrow_ballista_spark.types import local_frame
+from tests import jvm_forms
 from tests.conftest import SF_DIR
 
 REG = load_all()
@@ -60,8 +61,8 @@ def test_band_keys_golden_pin(spark):
         "doc_id long, hashes array<long>",
     )
     col_form = hashes.select(
-        "doc_id", *dedup.minhash_signature("hashes", num_perm)
-    ).select("doc_id", dedup.band_hash_array(num_perm, rpb).alias("b"))
+        "doc_id", *jvm_forms.minhash_signature("hashes", num_perm)
+    ).select("doc_id", jvm_forms.band_hash_array(num_perm, rpb).alias("b"))
     arr_form = dedup.minhash_sigs_arrow(
         hashes, "doc_id", "hashes", num_perm
     ).select(

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 from arrow_ballista_spark.catalog import load_table
 from arrow_ballista_spark.operators import dedup, multimodal, similarity
 from arrow_ballista_spark.queries import load_all
+from tests import jvm_forms
 from tests.conftest import SF_DIR, assert_same_results
 
 REG = load_all()
@@ -41,7 +42,6 @@ SF_REGENERATED_ORACLES = {
 SLOW_ORACLES = {
     "ext_dedup_canonical",
     "ext_dedup_canonical_central",
-    "ext_dedup_incremental",
     "ext_dedup_minhash_lsh",
     "ext_dedup_ppjoin",
     "ext_dedup_semantic_whitened",
@@ -1450,8 +1450,9 @@ def test_pq_code_rows_is_encode_without_the_final_agg(spark):
 
 def test_pq_assign_arrow_cell_and_residual_match_jvm(spark):
     """The r12 vectorized assignment kernel (_pq_assign_arrow) must be
-    BIT-identical to the JVM operators it fused: cell = ivf.assign_cells
-    (coordinate-order dot/norm folds, argmax first-max ties), residual =
+    BIT-identical to the JVM operators it fused: cell = the SQL
+    assign_cells fold (tests/jvm_forms.py: coordinate-order dot/norm
+    folds, argmax first-max ties), residual =
     zip_with(v, centroid, a - b), codes/dists = the per-subspace
     left-to-right squared-L2 fold with smallest-code ties.  Exact float
     equality on every field — the oracle-equality argument rests on it."""
@@ -1482,14 +1483,14 @@ def test_pq_assign_arrow_cell_and_residual_match_jvm(spark):
     }
     jvm_cell = {
         r.vec_id: r.cell
-        for r in ivf.assign_cells(
+        for r in jvm_forms.assign_cells(
             df.select("vec_id", F.col("embedding").alias("_v")), "_v", cents
         ).collect()
     }
     centlit = F.lit([[float(x) for x in c] for c in cents])
     jvm_res = {
         r.vec_id: list(r.rv)
-        for r in ivf.assign_cells(
+        for r in jvm_forms.assign_cells(
             df.select("vec_id", F.col("embedding").alias("_v")), "_v", cents
         )
         .select(
@@ -1517,6 +1518,220 @@ def test_pq_assign_arrow_cell_and_residual_match_jvm(spark):
                     best = (acc, c)
             assert codes[s] == best[1], (i, s)
             assert dists[s] == best[0], (i, s)  # exact float equality
+
+
+def _vector_frame(spark, X, vtype="array<double>"):
+    return spark.createDataFrame(
+        [(i, [float(v) for v in X[i]]) for i in range(len(X))],
+        f"vec_id long, embedding {vtype}",
+    )
+
+
+def test_ivf_kernels_match_jvm_exact(spark):
+    """assign_cells and probe_cells (the one _cosine_sims kernel) must
+    pick exactly the cells the SQL folds pick (tests/jvm_forms.py):
+    first-max assignment (sim DESC, cell ASC), sim DESC / cell DESC
+    probing, a NULL cell for a zero-norm row and the highest cells for a
+    zero-norm query.  A duplicated centroid makes every row tie exactly
+    between two cells; float32 input widens exactly."""
+    import numpy as np
+
+    from arrow_ballista_spark.operators import ivf
+
+    rng = np.random.RandomState(17)
+    X = rng.randn(60, 8).astype(np.float32)
+    X[9] = X[4]
+    X[11] = 0.0
+    df = _vector_frame(spark, X, "array<float>")
+    cents = [[float(v) for v in X[i]] for i in (0, 1, 1, 2, 3)]
+
+    def cells(frame):
+        return sorted(
+            (r.vec_id, r.cell)
+            for r in frame.select("vec_id", "cell").collect()
+        )
+
+    got = cells(ivf.assign_cells(df, "embedding", cents))
+    assert got == cells(jvm_forms.assign_cells(df, "embedding", cents))
+    assert dict(got)[11] is None and dict(got)[1] == 1
+    probed = {}
+    for nprobe in (1, 3, 9):
+        probed[nprobe] = cells(ivf.probe_cells(df, "embedding", cents, nprobe))
+        want = cells(jvm_forms.probe_cells(df, "embedding", cents, nprobe))
+        assert probed[nprobe] == want, nprobe
+    assert [c for i, c in probed[3] if i == 11] == [2, 3, 4]
+    assert len(probed[9]) == 5 * len(X)
+
+
+def test_pq_query_tables_match_jvm_exact(spark):
+    """The query-side ADC tables (_pq_query_tables, the _sub_dists
+    kernel) must equal the SQL nested-transform fold (tests/jvm_forms.py)
+    bit for bit — plain, and for residual IVF-PQ per probed cell after
+    subtracting that cell's centroid (zip_with(q, c, q - c))."""
+    import numpy as np
+
+    from arrow_ballista_spark.operators import ivf, pq
+
+    rng = np.random.RandomState(19)
+    X = rng.randn(30, 8)
+    X[5] = X[2]
+    df = _vector_frame(spark, X)
+    books = pq.pq_codebooks(df, "vec_id", "embedding", m=4, k=8)
+    cents = ivf.choose_centroids(df, "vec_id", "embedding", 3)
+    q = df.select("vec_id", F.col("embedding").alias("_qv"))
+
+    def tables(frame):
+        return sorted(
+            (r.vec_id, r.cell if "cell" in frame.columns else None,
+             [list(t) for t in r._qt])
+            for r in frame.collect()
+        )
+
+    got = tables(pq._pq_query_tables(q, "_qv", books))
+    want = tables(
+        q.select("vec_id", jvm_forms.pq_dist_tables(F.col("_qv"), books)
+                 .alias("_qt"))
+    )
+    assert got == want  # exact float equality
+    probed = ivf.probe_cells(q, "_qv", cents, 2)
+    centlit = F.lit(cents)
+    got = tables(pq._pq_query_tables(probed, "_qv", books, cents=cents))
+    want = tables(
+        probed.withColumn(
+            "_rv",
+            F.zip_with(F.col("_qv"), centlit[F.col("cell")],
+                       lambda a, b: a - b),
+        ).select(
+            "vec_id", "cell",
+            jvm_forms.pq_dist_tables(F.col("_rv"), books).alias("_qt"),
+        )
+    )
+    assert got == want
+
+
+def test_bruteforce_kernel_matches_jvm_exact(spark):
+    """brute_force_topk's kernel must return exactly the JVM crossJoin
+    fold's rows (tests/jvm_forms.py): same ids, ranks and bit-identical
+    cosines.  Query 0's k-th cosine is planted as an exact tie shared by
+    eleven corpus ids on both sides of the original k-th id (more than
+    the old per-batch margin of 8), spread over three partitions and
+    small Arrow batches; a zero-norm corpus row and a zero-norm query
+    have no cosine."""
+    import numpy as np
+
+    from arrow_ballista_spark.operators.similarity import brute_force_topk
+
+    k = 5
+    rng = np.random.RandomState(23)
+    X = rng.randn(120, 16)
+    X[7] = 0.0  # zero-norm corpus row
+    X[2] = 0.0  # zero-norm query
+    q0 = X[0]
+    cos = X @ q0 / np.maximum(np.linalg.norm(X, axis=1), 1e-300)
+    cos[[0, 7]] = -np.inf
+    order = np.argsort(-cos)
+    kth = int(order[k - 1])
+    tail = sorted(int(i) for i in order[-30:] if i not in (0, 1, 2, 3, 7))
+    planted = tail[:5] + tail[-5:] + [kth]
+    assert min(planted) < kth < max(planted)
+    for i in planted:
+        X[i] = X[kth]
+    df = _vector_frame(spark, X, "array<float>").repartition(3)
+    queries = df.where("vec_id < 4").withColumnRenamed("vec_id", "query_id")
+    corpus = df.withColumnRenamed("vec_id", "corpus_id")
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "16")
+    got = {}
+    try:
+        for exclude_self in (True, False):
+            got[exclude_self], want = (
+                sorted(
+                    tuple(r)
+                    for r in fn(queries, corpus, k=k,
+                                exclude_self=exclude_self).collect()
+                )
+                for fn in (brute_force_topk, jvm_forms.brute_force_topk)
+            )
+            assert got[exclude_self] == want, exclude_self  # exact floats
+    finally:
+        spark.conf.set(key, old)
+    q0 = sorted((r for r in got[True] if r[0] == 0), key=lambda r: r[3])
+    # the k-th place goes to the smallest of the eleven tied ids
+    assert len(q0) == k and q0[-1][1] == min(planted)
+    assert not [r for r in got[False] if r[0] == 2 or r[1] == 7]
+
+
+def test_zero_norm_query_characterization(spark):
+    """A zero-norm query has no cosine.  Pinned behaviour (unchanged
+    from the SQL-fold operators): brute force returns no rows for it;
+    IVF probes the nprobe HIGHEST cell ids (every similarity is NULL,
+    ties break cell DESC), so ivf_topk returns the k smallest ids in
+    those cells with NULL cosines and ivf_pq_topk ranks those cells'
+    members by ADC distance.  Zero-norm corpus rows are never indexed."""
+    import numpy as np
+
+    from arrow_ballista_spark.operators import ivf, pq, similarity
+
+    rng = np.random.RandomState(5)
+    X = np.vstack([rng.randn(40, 8), np.zeros((1, 8))])  # id 40 is zero
+    emb = _vector_frame(spark, X)
+    q = emb.where(F.col("vec_id").isin(0, 40)).withColumnRenamed(
+        "vec_id", "query_id"
+    )
+    c = emb.withColumnRenamed("vec_id", "corpus_id")
+
+    def rows(df, qid):
+        return sorted(
+            (r[1], r[3], r[2]) for r in df.collect() if r[0] == qid
+        )
+
+    bf = similarity.brute_force_topk(q, c, k=5)
+    assert rows(bf, 40) == []
+    assert [r[0] for r in sorted(rows(bf, 0), key=lambda r: r[1])] == [
+        10, 38, 37, 8, 39
+    ]
+    cents = ivf.choose_centroids(c, "corpus_id", "embedding", 4)
+    top_cells = {
+        r.corpus_id
+        for r in ivf.assign_cells(
+            c.where("corpus_id < 40"), "embedding", cents
+        ).collect()
+        if r.cell in (2, 3)
+    }
+    got = rows(ivf.ivf_topk(q, c, k=5, n_cells=4, nprobe=2), 40)
+    assert got == [
+        (i, n, None) for n, i in enumerate(sorted(top_cells)[:5], 1)
+    ]
+    assert [r[0] for r in got] == [3, 4, 5, 7, 10]
+    got = rows(
+        pq.ivf_pq_topk(q, c, k=5, n_cells=4, nprobe=2, m=2, n_codes=4), 40
+    )
+    assert [(i, n) for i, n, _ in got] == [
+        (3, 1), (5, 2), (10, 3), (21, 4), (28, 5)
+    ]
+    assert {d for _, _, d in got} == {2.874351}
+    assert {i for i, _, _ in got} <= top_cells
+
+
+def test_shuffle_partitions_helper_parses_auto(spark):
+    """Managed platforms report spark.sql.shuffle.partitions as "auto"
+    (this Spark rejects setting it, so a stand-in session carries it):
+    the one helper falls back to defaultParallelism."""
+    from types import SimpleNamespace
+
+    from arrow_ballista_spark.session import shuffle_partitions
+
+    assert shuffle_partitions(spark) == int(
+        spark.conf.get("spark.sql.shuffle.partitions")
+    )
+    managed = SimpleNamespace(
+        conf=SimpleNamespace(get=lambda key, *default: "auto"),
+        sparkContext=spark.sparkContext,
+    )
+    assert shuffle_partitions(managed) == (
+        spark.sparkContext.defaultParallelism
+    )
 
 
 def _sqdist(vec: str, cent: str):
@@ -1634,23 +1849,44 @@ def _bad_vector_frames(spark):
 
 @pytest.mark.parametrize("case", ["null", "ragged"])
 @pytest.mark.parametrize(
-    "kernel", ["kmeans_assign", "lsh_buckets_arrow", "_pq_assign_arrow"]
+    "kernel",
+    [
+        "kmeans_assign",
+        "lsh_buckets_arrow",
+        "_pq_assign_arrow",
+        "assign_cells",
+        "probe_cells",
+        "_pq_query_tables",
+        "brute_force_topk",
+    ],
 )
 def test_vector_kernels_reject_null_and_ragged_rows(spark, kernel, case):
     """Every Arrow vector kernel reads its batches through the one
     similarity._vector_reader contract: a NULL or wrong-length vector
     raises a ValueError naming the operator, the expected dim and the
     row's fault — never a bare numpy reshape error."""
-    from arrow_ballista_spark.operators import kmeans, pq, similarity
+    from arrow_ballista_spark.operators import ivf, kmeans, pq, similarity
 
     df, fault = _bad_vector_frames(spark)[case]
+    books = [[[0.0, 0.0], [1.0, 1.0]]] * 2
+    cents = [[1.0, 0.0, 0.0, 0.0], [0.0, 1.0, 0.0, 0.0]]
     run = {
         "kmeans_assign": lambda: kmeans.kmeans_assign(df, k=2, iters=2),
         "lsh_buckets_arrow": lambda: similarity.lsh_buckets_arrow(
             df, "vec_id", "embedding", [[[1.0, 0.0, 0.0, 0.0]]]
         ),
         "_pq_assign_arrow": lambda: pq._pq_assign_arrow(
-            df, "vec_id", "embedding", [[[0.0, 0.0], [1.0, 1.0]]] * 2
+            df, "vec_id", "embedding", books
+        ),
+        "assign_cells": lambda: ivf.assign_cells(df, "embedding", cents),
+        "probe_cells": lambda: ivf.probe_cells(df, "embedding", cents, 1),
+        "_pq_query_tables": lambda: pq._pq_query_tables(
+            df, "embedding", books
+        ),
+        # the bad row is in the corpus, read by the kernel on a worker
+        "brute_force_topk": lambda: similarity.brute_force_topk(
+            df.where("vec_id < 3").withColumnRenamed("vec_id", "query_id"),
+            df.withColumnRenamed("vec_id", "corpus_id"),
         ),
     }[kernel]
     with pytest.raises(Exception) as err:
@@ -1680,10 +1916,10 @@ def test_kmeans_empty_corpus_returns_empty_frames(spark, vectorized):
 
 
 def test_minhash_sigs_arrow_matches_column_form(spark):
-    """The r12 vectorized signature kernel (minhash_sigs_arrow) must be
-    BIT-identical to the minhash_signature column form on every lane:
-    normal docs, an empty-gram doc (NULL signature), and a NULL-grams
-    doc — and the array banding (band_hash_array_from_sig) must produce
+    """The signature kernel (minhash_sigs_arrow) must be BIT-identical
+    to the SQL column form (tests/jvm_forms.py) on every lane: normal
+    docs, an empty-gram doc (NULL signature), and a NULL-grams doc — and
+    the engine's array banding (band_hash_array_from_sig) must produce
     the same band keys as the column banding on all of them.  Integer
     arithmetic end to end, so equality is exact."""
     from pyspark.sql import functions as F
@@ -1709,7 +1945,7 @@ def test_minhash_sigs_arrow_matches_column_form(spark):
     )
     num_perm, rpb = 32, 4
     col_form = hashes.select(
-        F.col("doc_id"), *dedup.minhash_signature("hashes", num_perm)
+        F.col("doc_id"), *jvm_forms.minhash_signature("hashes", num_perm)
     )
     want = {
         r.doc_id: [r[f"mh_{i}"] for i in range(num_perm)]
@@ -1725,7 +1961,7 @@ def test_minhash_sigs_arrow_matches_column_form(spark):
     want_bands = {
         r.doc_id: list(r.b)
         for r in col_form.select(
-            "doc_id", dedup.band_hash_array(num_perm, rpb).alias("b")
+            "doc_id", jvm_forms.band_hash_array(num_perm, rpb).alias("b")
         ).collect()
     }
     got_bands = {

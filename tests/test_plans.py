@@ -72,18 +72,20 @@ def test_codegen_covers_agg_hot_path(spark):
 
 
 def test_minhash_pipeline_is_map_only_until_band_join(spark):
-    """The minhash signature stage must not shuffle: shingling + 128
-    permutations are per-row array transforms."""
+    """The minhash signature stage must not shuffle: shingling is a
+    per-row array transform and the permutations one Arrow map pass."""
     from arrow_ballista_spark.operators import dedup
 
     docs = load_table(spark, SF_DIR, "documents")
     grams = docs.select(
         F.col("doc_id"), dedup.word_shingles("text", 3).alias("grams")
     )
-    sigs = grams.select(
+    hashes = grams.select(
         F.col("doc_id"), dedup.base_hashes("grams").alias("hashes")
-    ).select(F.col("doc_id"), *dedup.minhash_signature("hashes", 16))
+    )
+    sigs = dedup.minhash_sigs_arrow(hashes, "doc_id", "hashes", 16)
     assert explain.num_exchanges(sigs) == 0
+    assert "MapInArrow" in explain.explain_str(sigs, "simple")
 
 
 def test_topk_uses_take_ordered(spark):

@@ -815,33 +815,6 @@ def test_vectorized_kernels_agree_with_exact(spark):
         assert abs(c - p_vec[key]) <= 1e-9
 
 
-def test_vectorized_bruteforce_agrees_with_exact(spark):
-    """brute_force_topk(vectorized=True) must return the same (query,
-    corpus, rnk) rows as the fold path, cosines equal to 1e-9."""
-    from arrow_ballista_spark.catalog import load_table
-    from arrow_ballista_spark.operators.similarity import brute_force_topk
-
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    queries = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    corpus = emb.select(F.col("vec_id").alias("corpus_id"), "embedding")
-
-    def rows(vec):
-        return {
-            (r["query_id"], r["corpus_id"], r["rnk"]): r["cosine"]
-            for r in brute_force_topk(
-                queries, corpus, "query_id", "corpus_id", "embedding",
-                k=5, vectorized=vec,
-            ).collect()
-        }
-
-    exact, fast = rows(False), rows(True)
-    assert set(exact) == set(fast)
-    for key, c in exact.items():
-        assert abs(c - fast[key]) <= 1e-9
-
-
 def test_vectorized_kmeans_labels_survive_empty_cluster(spark):
     """If a cluster empties during the update, cids become non-contiguous;
     the vectorized kernel must emit ACTUAL cids (not argmin positions) and

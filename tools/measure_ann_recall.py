@@ -97,11 +97,7 @@ def main():
             F.col("vec_id").alias("query_id"), "embedding"
         )
         corpus = emb.select(F.col("vec_id").alias("corpus_id"), "embedding")
-        exact = topk_sets(
-            similarity.brute_force_topk(
-                queries, corpus, k=K, vectorized=True
-            )
-        )
+        exact = topk_sets(similarity.brute_force_topk(queries, corpus, k=K))
         for n_tables in (8, 16, 32):
             ann = topk_sets(
                 similarity.hyperplane_lsh_topk(
